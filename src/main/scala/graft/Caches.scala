@@ -43,15 +43,20 @@ object Caches {
     * still references are freed by the harness's per-query
     * [[clearPersisted]] instead of leaking one RDD per rep.
     */
-  def pinned(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint(true)
-    // the PERSISTED rdd is inside cp's LogicalRDD plan — `cp.rdd` would
-    // be a fresh deserializing wrapper whose unpersist is a no-op
+  def pinned(df: DataFrame): DataFrame = track(df.localCheckpoint(true))
+
+  /** Register the checkpoint behind `cp` for [[clearPersisted]] and
+    * return the frame to serve. The PERSISTED rdd is inside cp's
+    * LogicalRDD plan — `cp.rdd` would be a fresh deserializing wrapper
+    * whose unpersist is a no-op. A plan with no LogicalRDD has no rdd to
+    * reach, so the frame itself is held through [[persist]] instead:
+    * every pin is released by [[clearPersisted]].
+    */
+  private[graft] def track(cp: DataFrame): DataFrame =
     org.apache.spark.sql.graftshim.ColumnShim.logicalPlan(cp) match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         synchronized { pinnedRdds += l.rdd }
-      case _ => ()
+        cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
+      case _ => persist(cp)
     }
-    cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
-  }
 }

@@ -1468,7 +1468,7 @@ object SparkEntry {
       val okapiIdf = raw
         .select(col("word"),
           when(col("raw") < 0, lit(0.25 * avgIdf)).otherwise(col("raw")).as("idf"))
-      Search.scoreTerms(t.copy(idfValues = okapiIdf), SearchTerms, k1 = 1.5, b = 0.75)
+      Search.scoreTerms(t.withIdf(okapiIdf), SearchTerms, k1 = 1.5, b = 0.75)
         .withColumn("score", round(col("score"), 4))
         .orderBy(col("score").desc, col("doc_id").asc)
         .limit(10)

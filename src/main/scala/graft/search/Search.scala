@@ -22,56 +22,54 @@ import graft.text.Tokenizer
   *  - top-k goes through `orderBy(desc).limit(k)` which Catalyst plans as
   *    `TakeOrderedAndProject` — a true distributed top-k, no full sort.
   *
-  * Scale notes (100 TB): the IDF side is filtered to |query| rows before
-  * joining — explicitly `broadcast()`. The TF table is the big side and is
-  * filtered by an IN-list on `word` that pushes down to the Parquet scan.
-  * doc_lengths at 100 TB has one row per document and co-shuffles with the
-  * filtered TF on doc_id (both sides tiny after term filtering); AQE picks
-  * broadcast when the filtered TF side fits.
+  * Scale notes (100 TB): every scorer reads [[IndexTables.postings]]
+  * (TF ⋈ broadcast(IDF) ⋈ doc_lengths, defined once in `graft.index`)
+  * filtered by an IN-list on `word`. On a built index that join is
+  * lazy: the filter pushes down to the TF scan and, through the join
+  * key, to the IDF scan, so the IDF side is |query| rows and broadcast;
+  * doc_lengths at 100 TB has one row per document and co-shuffles with
+  * the filtered TF on doc_id (both sides tiny after term filtering); AQE
+  * picks broadcast when the filtered TF side fits. A loaded index
+  * (serving mode, [[Indexer.loadArtifacts]]) pins the joined postings
+  * in memory, sorted by (word, doc_id): a query reads only the column
+  * batches whose word range holds its terms, with no Parquet scan and
+  * no per-query broadcast. The pin costs memory in proportion to the
+  * postings (≈ 13 B per posting in Spark's columnar cache, ≈ 3.7 MB at
+  * 300k postings); at 100 TB it is range-partitioned by word.
   */
 object Search {
 
   /** Score all docs matching `terms`, descending. Output: (doc_id, score).
-    * Deterministic: ties broken by doc_id ascending.
+    * Deterministic: ties broken by doc_id ascending. One path for every
+    * index: the query terms' rows of [[IndexTables.postings]] — a lazy
+    * join on a built index, the pinned relation on a loaded one.
     */
   def scoreTerms(t: IndexTables, terms: Seq[String], k1: Double = BM25.DefaultK1,
-      b: Double = BM25.DefaultB): DataFrame = {
-    val tfq = t.termFrequencies.filter(col("word").isin(terms: _*))
-    // left joins for fidelity with `pyapp.py:94-95`; on a consistent index
-    // they never produce nulls (every indexed word has an IDF row, every
-    // doc a length row — SURVEY.md §2.4 note), so the optimizer's plan
-    // matches the inner-join one
-    tfq
-      .join(broadcast(t.idfValues.filter(col("word").isin(terms: _*))), Seq("word"), "left")
-      .join(t.docLengths, Seq("doc_id"), "left")
-      .withColumn("partial",
-        BM25.score(col("term_freq"), col("doc_length"), col("idf"), lit(t.avgdl), k1, b))
+      b: Double = BM25.DefaultB): DataFrame =
+    partials(t, t.postings.filter(col("word").isin(terms: _*)), k1, b)
       .groupBy("doc_id")
       .agg(sum("partial").as("score"))
       .orderBy(col("score").desc, col("doc_id").asc)
-  }
+
+  /** `postings` rows of `t` with their BM25 partial score as `partial`. */
+  private def partials(t: IndexTables, postings: DataFrame, k1: Double,
+      b: Double): DataFrame =
+    postings.withColumn("partial",
+      BM25.score(col("term_freq"), col("doc_length"), col("idf"), lit(t.avgdl), k1, b))
 
   /** CONJUNCTIVE (boolean-AND) scoring: only documents containing
     * EVERY query term are ranked — the strict-match mode every search
     * engine serves beside the default disjunctive OR ([[scoreTerms]]).
-    * One plan, ONE shuffle: the same filtered-TF ⋈ idf ⋈ doc_lengths
-    * lineage as scoreTerms with the matched-term count folded into the
-    * SAME hash aggregate (TF has one row per (doc, word), so
-    * count(*) IS the distinct-term count), then the |terms| filter —
-    * no second pass, no semi-join round. Output: (doc_id, score)
-    * descending, ties by doc_id.
+    * One plan, ONE shuffle: the same postings rows as scoreTerms with
+    * the matched-term count folded into the SAME hash aggregate
+    * (postings have one row per (doc, word), so count(*) IS the
+    * distinct-term count), then the |terms| filter — no second pass, no
+    * semi-join round. Output: (doc_id, score) descending, ties by doc_id.
     */
   def scoreTermsConjunctive(t: IndexTables, terms: Seq[String],
       k1: Double = BM25.DefaultK1, b: Double = BM25.DefaultB): DataFrame = {
     val ts = terms.distinct
-    val tfq = t.termFrequencies.filter(col("word").isin(ts: _*))
-    tfq
-      .join(broadcast(t.idfValues.filter(col("word").isin(ts: _*))),
-        Seq("word"), "left")
-      .join(t.docLengths, Seq("doc_id"), "left")
-      .withColumn("partial",
-        BM25.score(col("term_freq"), col("doc_length"), col("idf"),
-          lit(t.avgdl), k1, b))
+    partials(t, t.postings.filter(col("word").isin(ts: _*)), k1, b)
       .groupBy("doc_id")
       .agg(sum("partial").as("score"), count(lit(1)).as("n_terms"))
       .filter(col("n_terms") === ts.size)
@@ -105,19 +103,14 @@ object Search {
   /** Per-term score UPPER BOUNDS for MaxScore pruning: for every word,
     * the max over its postings of the BM25 partial — ub(t) ≥ any
     * contribution t can make to any document's score. ONE map-side-
-    * combined hash aggregate over TF ⋈ doc_lengths ⋈ idf (the same
-    * join shape as [[Indexer.docFreqIdf]]'s inputs), emitting one row
-    * per vocabulary word — at 100 TB this is an INDEX-TIME artifact,
+    * combined hash aggregate over [[IndexTables.postings]], emitting one
+    * row per vocabulary word — at 100 TB this is an INDEX-TIME artifact,
     * one small column beside `idf_values`, amortized over every query
     * (r11 VERDICT "Next round" #1). Output: (word, ub).
     */
   def termBounds(t: IndexTables, k1: Double = BM25.DefaultK1,
       b: Double = BM25.DefaultB): DataFrame =
-    t.termFrequencies
-      .join(t.docLengths, Seq("doc_id"))
-      .join(t.idfValues.select("word", "idf"), Seq("word"))
-      .withColumn("partial",
-        BM25.score(col("term_freq"), col("doc_length"), col("idf"), lit(t.avgdl), k1, b))
+    partials(t, t.postings, k1, b)
       .groupBy("word")
       .agg(max("partial").as("ub"))
 
@@ -185,15 +178,13 @@ object Search {
     val present = terms.filter(ubs.contains)
     if (present.isEmpty)
       return t.docLengths.select(col("doc_id"), lit(0.0).as("score")).limit(0)
+    // on a built index the optimizer pushes the semi-join below the
+    // postings joins, so only candidate postings meet IDF and doc_lengths
     def fullScore(candidates: DataFrame): DataFrame =
-      t.termFrequencies.filter(col("word").isin(present: _*))
-        // no join hint: the candidate side shrinks with term selectivity
-        // but is not bounded — AQE picks broadcast when it fits
-        .join(candidates, Seq("doc_id"), "left_semi")
-        .join(broadcast(t.idfValues.filter(col("word").isin(present: _*))), Seq("word"), "left")
-        .join(t.docLengths, Seq("doc_id"), "left")
-        .withColumn("partial",
-          BM25.score(col("term_freq"), col("doc_length"), col("idf"), lit(t.avgdl), k1, b))
+      partials(t, t.postings.filter(col("word").isin(present: _*))
+          // no join hint: the candidate side shrinks with term selectivity
+          // but is not bounded — AQE picks broadcast when it fits
+          .join(candidates, Seq("doc_id"), "left_semi"), k1, b)
         .groupBy("doc_id")
         .agg(sum("partial").as("score"))
     val tstar = present.maxBy(w => (ubs(w), w))
@@ -218,26 +209,34 @@ object Search {
   /** The SQL entry point done right (SURVEY.md §3.3a): the reference
     * string-formats avgdl and the term list into SQL over temp views it
     * never registers (`searchenginespark.py:214-235`). We register the
-    * views, escape the literals, and keep k1/b as real parameters.
+    * views, escape the literals, and keep k1/b as real parameters. The
+    * view names are unique per call and the views are dropped once
+    * `spark.sql` has analysed the query (the returned plan holds their
+    * tables), so concurrent calls on one session never read each
+    * other's index.
     */
   def sqlSearch(spark: SparkSession, t: IndexTables, terms: Seq[String],
       k: Int = 10, k1: Double = BM25.DefaultK1, b: Double = BM25.DefaultB): DataFrame = {
-    t.termFrequencies.createOrReplaceTempView("term_frequencies")
-    t.docLengths.createOrReplaceTempView("document_lengths")
-    t.idfValues.createOrReplaceTempView("idf_values")
+    val id = sqlViewIds.getAndIncrement()
+    val views = Seq(t.termFrequencies -> s"term_frequencies_$id",
+      t.docLengths -> s"document_lengths_$id", t.idfValues -> s"idf_values_$id")
+    views.foreach { case (df, name) => df.createOrReplaceTempView(name) }
     val termList = terms.map(s => "'" + s.replace("'", "''") + "'").mkString(", ")
-    spark.sql(
+    try spark.sql(
       s"""SELECT t.doc_id,
          |       SUM(i.idf * (t.term_freq * (${k1} + 1)) /
          |           (t.term_freq + ${k1} * (1 - ${b} + ${b} * d.doc_length / ${t.avgdl}))) AS score
-         |FROM term_frequencies t
-         |JOIN document_lengths d ON t.doc_id = d.doc_id
-         |JOIN idf_values i ON t.word = i.word
+         |FROM term_frequencies_$id t
+         |JOIN document_lengths_$id d ON t.doc_id = d.doc_id
+         |JOIN idf_values_$id i ON t.word = i.word
          |WHERE t.word IN ($termList)
          |GROUP BY t.doc_id
          |ORDER BY score DESC, doc_id ASC
          |LIMIT $k""".stripMargin)
+    finally views.foreach { case (_, name) => spark.catalog.dropTempView(name) }
   }
+
+  private val sqlViewIds = new java.util.concurrent.atomic.AtomicLong
 
   /** Exact-phrase match over positional postings
     * ([[Indexer.positionalPostings]]): phrase term i maps each of its

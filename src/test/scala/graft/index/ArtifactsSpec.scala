@@ -1,7 +1,14 @@
 package graft.index
 
 import java.nio.file.Files
-import graft.SparkSpec
+
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+
+import graft.{Caches, SparkSpec}
+import graft.search.Search
 
 /** S3 sink path: persist all reference-shaped index artifacts
   * (SURVEY.md §1.1) and read them back.
@@ -60,5 +67,69 @@ class ArtifactsSpec extends SparkSpec {
       .scoreTerms(t, Seq("merge", "scan"))
       .as[(Long, Double)].collect().toSeq
     assert(score(loaded) == score(built)) // bitwise-equal scores
+  }
+
+  /** A built index over a small corpus and the index loaded back from
+    * its written artifacts.
+    */
+  private lazy val (built, loaded) = {
+    import spark.implicits._
+    val corpus = Seq(
+      (1L, "merge sort merge table scan"),
+      (2L, "hash join sort table"),
+      (3L, "scan scan merge"),
+      (4L, "btree index lookup merge join"),
+      (5L, "table table scan filter")).toDF("doc_id", "text")
+    val b = Indexer.build(corpus, stem = false)
+    val dir = Files.createTempDirectory("graft-pinned").toString
+    Indexer.writeArtifacts(spark, b, dir)
+    (b, Indexer.loadArtifacts(spark, dir))
+  }
+
+  private val queries = Seq(
+    Seq("merge", "scan", "table"), // several terms
+    Seq("merge", "merge", "join"), // a repeated term
+    Seq("nosuchterm", "zzz"),      // out-of-vocabulary terms only
+    Seq.empty[String])             // no terms
+
+  private def scores(t: IndexTables, terms: Seq[String]): Seq[(Long, Double)] = {
+    import spark.implicits._
+    Search.scoreTerms(t, terms).as[(Long, Double)].collect().toSeq
+  }
+
+  test("a loaded index scores every query like the built one") {
+    queries.foreach(q => assert(scores(loaded, q) == scores(built, q), q))
+    assert(scores(loaded, queries.head).size == 5)
+    assert(scores(loaded, queries(2)).isEmpty && scores(loaded, queries(3)).isEmpty)
+  }
+
+  /** Every physical node of `p`, through AQE's stages; an in-memory scan
+    * is a leaf (the plan that filled the cache is not part of the query).
+    */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => s +: nodes(s.plan)
+    case other => other +: other.children.flatMap(nodes)
+  }
+
+  test("a loaded index scores from its pinned postings, not the Parquet artifacts") {
+    val df = Search.scoreTerms(loaded, Seq("merge", "scan"))
+    df.collect() // AQE finalizes its plan
+    val plan = nodes(org.apache.spark.sql.graftshim.ColumnShim.executedPlan(df))
+    val scans = plan.collect { case s: InMemoryTableScanExec => s }
+    assert(scans.size == 1, plan.mkString("\n"))
+    // the word filter reaches the scan, where batch statistics apply it
+    assert(scans.head.predicates.exists(p =>
+      p.isInstanceOf[org.apache.spark.sql.catalyst.expressions.In] &&
+        p.references.map(_.name).toSet == Set("word")), scans.head.predicates)
+    // no per-query read or broadcast of idf_values / doc_lengths
+    assert(!plan.exists(_.isInstanceOf[FileSourceScanExec]), plan.mkString("\n"))
+    assert(!plan.exists(_.isInstanceOf[BroadcastExchangeExec]), plan.mkString("\n"))
+  }
+
+  test("clearing the caches costs a loaded index speed, not rows") {
+    val before = queries.map(scores(loaded, _))
+    Caches.clearPersisted()
+    assert(queries.map(scores(loaded, _)) == before)
   }
 }

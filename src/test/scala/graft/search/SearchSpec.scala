@@ -142,4 +142,96 @@ class SearchSpec extends SparkSpec {
       .as[(Long, Double)].collect().toMap
     assert(dup == and)
   }
+
+  /** Plain-Scala BM25 over collected index rows: doc_id → score. */
+  private def expectedScores(tf: Seq[(Long, String, Long)], dl: Map[Long, Long],
+      idf: Map[String, Double], avgdl: Double, terms: Set[String],
+      k1: Double = BM25.DefaultK1, b: Double = BM25.DefaultB): Map[Long, Double] =
+    tf.filter(r => terms(r._2)).groupBy(_._1).map { case (d, rs) =>
+      d -> rs.map { case (_, w, f) =>
+        idf(w) * (f * (k1 + 1)) / (f + k1 * (1 - b + b * dl(d) / avgdl))
+      }.sum
+    }
+
+  test("an index with a swapped IDF scores with that IDF, not stale postings") {
+    import spark.implicits._
+    val t = Indexer.build(corpus, stem = false)
+    val idf2 = t.idfValues.select(col("word"), (col("idf") * 3.0 + 1.0).as("idf"))
+    val terms = Seq("merge", "join", "table")
+    val got = Search.scoreTerms(t.withIdf(idf2), terms)
+      .as[(Long, Double)].collect().toMap
+    val want = expectedScores(
+      t.termFrequencies.as[(Long, String, Long)].collect().toSeq,
+      t.docLengths.as[(Long, Long)].collect().toMap,
+      idf2.as[(String, Double)].collect().toMap, t.avgdl, terms.toSet)
+    assert(got.keySet == want.keySet)
+    got.foreach { case (d, s) => assert(math.abs(s - want(d)) < 1e-12, s"doc $d: $s vs ${want(d)}") }
+    assert(got != Search.scoreTerms(t, terms).as[(Long, Double)].collect().toMap)
+    t.flatWords.unpersist(false)
+  }
+
+  test("bm25_okapi_variant serves the Okapi IDF it swaps in") {
+    import spark.implicits._
+    // "merge" is in 4 of 5 docs, so its raw Okapi idf is negative and floored
+    val docs = Seq(
+      (1L, "merge sort merge join"),
+      (2L, "merge table scan table"),
+      (3L, "merge hash join"),
+      (4L, "scan merge btree"),
+      (5L, "index lookup join table")).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft-okapi").toString
+    docs.write.parquet(s"$dir/documents.parquet")
+    val got = graft.SparkEntry.queries("bm25_okapi_variant")(spark, dir)
+      .as[(Long, Double)].collect().toSeq
+    val t = Indexer.build(docs, stem = false)
+    val n = t.nDocs.toDouble
+    val raw = t.idfValues.select("word", "doc_freq").as[(String, Long)].collect()
+      .map { case (w, df) => w -> math.log((n - df + 0.5) / (df + 0.5)) }.toMap
+    assert(raw("merge") < 0)
+    val floor = 0.25 * raw.values.sum / raw.size
+    val okapi = raw.map { case (w, v) => w -> (if (v < 0) floor else v) }
+    def r4(x: Double) = BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val want = expectedScores(
+      t.termFrequencies.as[(Long, String, Long)].collect().toSeq,
+      t.docLengths.as[(Long, Long)].collect().toMap,
+      okapi, t.avgdl, graft.SparkEntry.SearchTerms.toSet, k1 = 1.5)
+      .toSeq.map { case (d, s) => (d, r4(s)) }
+      .sortBy { case (d, s) => (-s, d) }.take(10)
+    assert(got.size == 5)
+    assert(got == want)
+    t.flatWords.unpersist(false)
+  }
+
+  test("concurrent sqlSearch calls on different indexes each read their own tables") {
+    import spark.implicits._
+    val other = Seq(
+      (101L, "merge join merge"),
+      (102L, "join table join join"),
+      (103L, "scan merge")).toDF("doc_id", "text")
+    val indexes = Seq(Indexer.build(corpus, stem = false), Indexer.build(other, stem = false))
+    val terms = Seq("merge", "join")
+    def run(t: graft.index.IndexTables): Map[Long, Double] =
+      Search.sqlSearch(spark, t, terms, k = 10)
+        .select(col("doc_id"), round(col("score"), 9).as("score"))
+        .as[(Long, Double)].collect().toMap
+    val want = indexes.map(run)
+    assert(want(0).keySet == Set(1L, 2L) && want(1).keySet == Set(101L, 102L, 103L))
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val threads = indexes.zip(want).map { case (t, w) =>
+      new Thread(() => (1 to 15).foreach { i =>
+        try {
+          val got = run(t)
+          if (got != w) errors.add(s"call $i: $got != $w")
+        } catch { case e: Throwable => errors.add(s"call $i: $e") }
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(errors.isEmpty, errors.toString)
+    // the per-call views are gone once each query is analysed
+    val left = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.matches("(term_frequencies|document_lengths|idf_values)_\\d+"))
+    assert(left.isEmpty, left.mkString(", "))
+    indexes.foreach(_.flatWords.unpersist(false))
+  }
 }
