@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Headline benchmark (driver contract): runs every gate query on
   * SPARK_GRAFT_SF_DIR and prints machine-parseable JSON.
@@ -83,15 +82,6 @@ object Bench {
       .mkString("{", ",",
         s""","io_documents_scan":$ioProbe,"median":$calMedian}""")
     System.err.println(s"BENCH calibration $calJson")
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // cache hygiene: each rep pays for (and then releases) its own
-      // scoped persists; the serving index cache is bounded separately
-      Caches.clearPersisted()
-      dt
-    }
     // Codegen-compilation forensics (r16 VERDICT #2): the r8
     // cache-thrash signature is scattered 10×+ spikes on untouched
     // plans in FULL sweeps only. Janino compilations during the timed
@@ -113,16 +103,29 @@ object Bench {
     var pos = 0
     val sweepComps0 = codegenCompilations()
     val compDeltas = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val results = SparkEntry.queries.map { case (name, fn) =>
+    val outcomes = SparkEntry.queries.map { case (name, fn) =>
       val c0 = codegenCompilations()
-      val samples = (1 to reps).map(_ => timeOnce(fn)).sorted
+      // cache hygiene: each rep pays for (and then releases) its own
+      // scoped persists; the serving index cache is bounded separately
+      val outcome = timeReps(reps, () => { fn(spark, sfDir).count(); () },
+        () => Caches.clearPersisted())
       val dComp = codegenCompilations() - c0
       if (dComp > 0) compDeltas(name) = dComp
       pos += 1
-      val med = samples(samples.size / 2)
-      System.err.println(f"BENCHQ $pos%3d ${java.time.LocalTime.now()} $name%-28s $med%8.3f s (min ${samples.head}%.3f max ${samples.last}%.3f) comps=$dComp")
-      name -> med // median
+      outcome match {
+        case Right(samples) =>
+          val med = samples(samples.size / 2)
+          System.err.println(f"BENCHQ $pos%3d ${java.time.LocalTime.now()} $name%-28s $med%8.3f s (min ${samples.head}%.3f max ${samples.last}%.3f) comps=$dComp")
+          name -> Right(med) // median
+        case Left(e) =>
+          System.err.println(f"BENCHQ $pos%3d ${java.time.LocalTime.now()} $name%-28s FAILED ${e.getClass.getName}: ${e.getMessage}")
+          name -> Left(e.getClass.getName)
+      }
     }
+    // a query that threw has no time: it is left out of the per-query
+    // dict and the total, listed under "_failed", and fails the run
+    val results = outcomes.collect { case (k, Right(v)) => k -> v }
+    val failed = outcomes.collect { case (k, Left(c)) => k -> c }
     val sweepComps = codegenCompilations() - sweepComps0
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -134,9 +137,11 @@ object Bench {
     // entry; sorted by name so round-over-round diffs are line-stable.
     val compJson = compDeltas.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    val failedJson = failed.toSeq.sortBy(_._1)
+      .map { case (k, c) => s""""$k":"$c"""" }.mkString("{", ",", "}")
     val perQueryJson = results.toSeq.sortBy(_._1)
       .map { case (k, v) => s"""  "$k": $v""" }
-      .mkString(s"""{\n  "_sf": "$sfDir",\n  "_reps": $reps,\n  "_total_sec": $total,\n  "_calibration": $calJson,\n  "_codegen_sweep_compilations": $sweepComps,\n  "_codegen_compilations_by_query": $compJson,\n""", ",\n", "\n}\n")
+      .mkString(s"""{\n  "_sf": "$sfDir",\n  "_reps": $reps,\n  "_total_sec": $total,\n  "_failed": $failedJson,\n  "_calibration": $calJson,\n  "_codegen_sweep_compilations": $sweepComps,\n  "_codegen_compilations_by_query": $compJson,\n""", ",\n", "\n}\n")
     try {
       // absolute WorkDir path (r9 ADVICE: a cwd-relative path lands the
       // audit trail wherever the launcher happened to cd)
@@ -212,5 +217,29 @@ object Bench {
     println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","reps":$reps,"_calibration":$calJson,"queries":$qs,"value":$total}""")
     println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","calibration":$calMedian}""")
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"BENCH failed queries: $failedJson")
+      sys.exit(1)
+    }
+  }
+
+  /** `reps` timed runs of `run` (seconds, sorted), each followed by
+    * `after`. A run that throws ends the query: the result is its
+    * exception, never a time.
+    */
+  private[graft] def timeReps(reps: Int, run: () => Unit,
+      after: () => Unit): Either[Throwable, Seq[Double]] = {
+    val samples = scala.collection.mutable.ArrayBuffer.empty[Double]
+    while (samples.size < reps) {
+      val t0 = System.nanoTime()
+      val failure = try { run(); None } catch { case e: Throwable => Some(e) }
+      val dt = (System.nanoTime() - t0) / 1e9
+      after()
+      failure match {
+        case Some(e) => return Left(e)
+        case None => samples += dt
+      }
+    }
+    Right(samples.sorted.toSeq)
   }
 }

@@ -251,27 +251,23 @@ object SparkEntry {
     * indexing pipeline itself.
     */
   private val MaxCachedIndexes = 4
-  private val indexCache =
-    scala.collection.mutable.LinkedHashMap.empty[(String, String, Boolean), graft.index.IndexTables]
-  private def builtIndex(s: SparkSession, dir: String, stem: Boolean): graft.index.IndexTables =
+  private val indexCache = scala.collection.mutable.LinkedHashMap
+    .empty[(SparkSession, String, Boolean), graft.index.IndexTables]
+  private[graft] def builtIndex(s: SparkSession, dir: String,
+      stem: Boolean): graft.index.IndexTables =
     indexCache.synchronized {
-      // key includes the owning session (r2 ADVICE): a restarted session
-      // must not be served tables bound to a stopped one. Bounded FIFO —
-      // evicted entries unpersist their flat-words cache so a long-lived
+      // keyed by the owning session's reference, as in [[DirMemo]]: a
+      // restarted session is never served tables bound to a stopped one,
+      // and entries of stopped sessions are dropped without unpersist
+      // (their blocks died with the context). Another LIVE session's index
+      // stays pinned: its tables may already be in use. Bounded FIFO —
+      // the evicted entry unpersists its flat-words cache so a long-lived
       // session does not leak persisted RDDs.
-      // unpersist may throw against an already-stopped SparkContext (r3
-      // ADVICE) — exactly the restart scenario the session key guards, so
-      // eviction must never fail the NEW session's build
-      def safeUnpersist(t: graft.index.IndexTables): Unit =
-        try t.flatWords.unpersist(false) catch { case _: Throwable => () }
-      val sessionKey = System.identityHashCode(s).toString
-      indexCache.filterInPlace { case ((sk, _, _), t) =>
-        sk == sessionKey || { safeUnpersist(t); false }
-      }
-      val key = (sessionKey, dir, stem)
+      indexCache.filterInPlace { case ((owner, _, _), _) => !owner.sparkContext.isStopped }
+      val key = (s, dir, stem)
       if (!indexCache.contains(key) && indexCache.size >= MaxCachedIndexes) {
         val (oldKey, old) = indexCache.head
-        safeUnpersist(old)
+        try old.flatWords.unpersist(false) catch { case _: Throwable => () }
         indexCache.remove(oldKey)
       }
       indexCache.getOrElseUpdate(key,

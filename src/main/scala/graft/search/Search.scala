@@ -35,7 +35,11 @@ import graft.text.Tokenizer
   * batches whose word range holds its terms, with no Parquet scan and
   * no per-query broadcast. The pin costs memory in proportion to the
   * postings (≈ 13 B per posting in Spark's columnar cache, ≈ 3.7 MB at
-  * 300k postings); at 100 TB it is range-partitioned by word.
+  * 300k postings); at 100 TB it is range-partitioned by word. The same
+  * load pins the `opinion_text` artifact, held by its path: a snippet
+  * join to a plain read of that path is an in-memory scan, at a cost of
+  * ≈ the text bytes (≈ 11 MB at 600 documents), spilling to disk past
+  * storage memory.
   */
 object Search {
 

@@ -1,11 +1,14 @@
 package graft.index
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.storage.StorageLevel
 
 import graft.{Caches, SparkSpec}
 import graft.search.Search
@@ -81,10 +84,11 @@ class ArtifactsSpec extends SparkSpec {
       (4L, "btree index lookup merge join"),
       (5L, "table table scan filter")).toDF("doc_id", "text")
     val b = Indexer.build(corpus, stem = false)
-    val dir = Files.createTempDirectory("graft-pinned").toString
-    Indexer.writeArtifacts(spark, b, dir)
-    (b, Indexer.loadArtifacts(spark, dir))
+    Indexer.writeArtifacts(spark, b, pinnedDir,
+      opinionText = Some(corpus.select($"doc_id", $"text".as("opinion_text"))))
+    (b, Indexer.loadArtifacts(spark, pinnedDir))
   }
+  private lazy val pinnedDir = Files.createTempDirectory("graft-pinned").toString
 
   private val queries = Seq(
     Seq("merge", "scan", "table"), // several terms
@@ -127,9 +131,107 @@ class ArtifactsSpec extends SparkSpec {
     assert(!plan.exists(_.isInstanceOf[BroadcastExchangeExec]), plan.mkString("\n"))
   }
 
+  /** One served op as the serving mode runs it: top-10 of `t` joined by
+    * broadcast to a plain read of `dir`'s text artifact, with snippets.
+    */
+  private def servedOp(t: IndexTables, dir: String): DataFrame =
+    broadcast(Search.scoreTerms(t, Seq("merge", "scan", "table")).limit(10))
+      .join(spark.read.parquet(s"$dir/opinion_text.parquet"), Seq("doc_id"))
+      .withColumn("snippet", Search.snippet(col("opinion_text"), 12))
+      .select("doc_id", "score", "snippet")
+      .orderBy(col("score").desc, col("doc_id").asc)
+
+  private def executed(df: DataFrame): Seq[SparkPlan] = {
+    df.collect() // AQE finalizes its plan
+    nodes(org.apache.spark.sql.graftshim.ColumnShim.executedPlan(df))
+  }
+
+  test("a loaded index pins its text artifact, so a plain read of it is served from memory") {
+    loaded
+    val plan = executed(spark.read.parquet(s"$pinnedDir/opinion_text.parquet"))
+    assert(plan.exists(_.isInstanceOf[InMemoryTableScanExec]), plan.mkString("\n"))
+    assert(!plan.exists(_.isInstanceOf[FileSourceScanExec]), plan.mkString("\n"))
+  }
+
+  test("a served op over a loaded index reads no Parquet and returns the built index's rows") {
+    val op = servedOp(loaded, pinnedDir)
+    val plan = executed(op)
+    assert(!plan.exists(_.isInstanceOf[FileSourceScanExec]), plan.mkString("\n"))
+    assert(op.collect().toSeq == servedOp(built, pinnedDir).collect().toSeq)
+    assert(op.count() == 5)
+  }
+
   test("clearing the caches costs a loaded index speed, not rows") {
     val before = queries.map(scores(loaded, _))
+    val servedBefore = servedOp(loaded, pinnedDir).collect().toSeq
     Caches.clearPersisted()
     assert(queries.map(scores(loaded, _)) == before)
+    assert(servedOp(loaded, pinnedDir).collect().toSeq == servedBefore)
+  }
+
+  test("a directory without a text artifact loads and pins only the postings") {
+    import spark.implicits._
+    val corpus = Seq((1L, "merge sort merge"), (2L, "hash join sort")).toDF("doc_id", "text")
+    val b = Indexer.build(corpus, stem = false)
+    val dir = Files.createTempDirectory("graft-notext").toString
+    Indexer.writeArtifacts(spark, b, dir)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val t = Indexer.loadArtifacts(spark, dir)
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(pinned.size == 1, pinned)
+    assert(t.postings.storageLevel != StorageLevel.NONE)
+    assert(scores(t, Seq("merge", "sort")) == scores(b, Seq("merge", "sort")))
+    b.flatWords.unpersist(false)
+  }
+
+  /** Corpus `i` of a reload cycle: doc 1 holds `i + 1` copies of "merge",
+    * so every cycle has its own scores, and every text names its cycle.
+    */
+  private def cycleCorpus(i: Int): DataFrame = {
+    import spark.implicits._
+    Seq((1L, ("merge " * (i + 1)) + s"sort cycle$i"),
+      (2L, s"hash join sort table cycle$i"),
+      (3L, s"scan merge cycle$i")).toDF("doc_id", "text")
+  }
+
+  /** Writes corpus `i`'s artifacts to `dir` through `write`, reloads the
+    * directory and checks that the reload serves corpus `i`: the built
+    * index's scores and its texts.
+    */
+  private def reloadCycle(i: Int, dir: String)(write: (IndexTables, DataFrame) => Unit): Unit = {
+    import spark.implicits._
+    val corpus = cycleCorpus(i)
+    val b = Indexer.build(corpus, stem = false)
+    write(b, corpus.select($"doc_id", $"text".as("opinion_text")))
+    val t = Indexer.loadArtifacts(spark, dir)
+    val terms = Seq("merge", "sort")
+    assert(scores(t, terms) == scores(b, terms), s"cycle $i")
+    val texts = spark.read.parquet(s"$dir/opinion_text.parquet")
+      .as[(Long, String)].collect().toMap
+    assert(texts == corpus.as[(Long, String)].collect().toMap, s"cycle $i")
+    b.flatWords.unpersist(false)
+  }
+
+  test("a reload after an in-session overwrite serves the new artifacts") {
+    val dir = Files.createTempDirectory("graft-reload").toString
+    (0 until 10).foreach(i => reloadCycle(i, dir) { (b, text) =>
+      Indexer.writeArtifacts(spark, b, dir, opinionText = Some(text))
+    })
+  }
+
+  test("a reload after the files are replaced outside Spark serves the new artifacts") {
+    val dir = Files.createTempDirectory("graft-replaced")
+    (0 until 3).foreach(i => reloadCycle(i, dir.toString) { (b, text) =>
+      val staged = Files.createTempDirectory("graft-staged")
+      Indexer.writeArtifacts(spark, b, staged.toString, opinionText = Some(text))
+      deleteTree(dir)
+      Files.move(staged, dir)
+    })
+  }
+
+  private def deleteTree(p: Path): Unit = {
+    val walk = Files.walk(p)
+    try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
+    finally walk.close()
   }
 }
