@@ -106,7 +106,7 @@ object Bench {
     val outcomes = SparkEntry.queries.map { case (name, fn) =>
       val c0 = codegenCompilations()
       // cache hygiene: each rep pays for (and then releases) its own
-      // scoped persists; the serving index cache is bounded separately
+      // scoped persists; the session memos keep serving across reps
       val outcome = timeReps(reps, () => { fn(spark, sfDir).count(); () },
         () => Caches.clearPersisted())
       val dComp = codegenCompilations() - c0

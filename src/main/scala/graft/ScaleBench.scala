@@ -657,7 +657,9 @@ object ScaleBench {
     def time(q: String, dir: String): Double =
       BenchUtil.medianTimeSec(reps, after = () => {
         Caches.clearPersisted()
-        SparkEntry.resetSharedCaches() // reps must pay the real CC cost
+        // reps must pay the real cost: memo builds, the built index and
+        // the tbl listings
+        SessionMemo.resetAll()
       })(() => queryFor(q)(spark, dir).count())
 
     java.nio.file.Files.createDirectories(
@@ -723,7 +725,7 @@ object ScaleBench {
         val n = graft.ext.Dedup.minhashPairs(docs, k = 3, numHashes = 32,
           bands = 16, threshold = 0.8).count()
         Caches.clearPersisted()
-        SparkEntry.resetSharedCaches()
+        SessionMemo.resetAll()
         (f, n)
       }
       appendRow(s"""{"metric":"input_growth_row","query":"dedup_components","input":"minhash_pairs","n_x1":${counts.head._2},"n_x$factor":${counts.last._2},"growth":${counts.last._2.toDouble / math.max(1L, counts.head._2)}}""")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ext.{AsOfJoin, Contamination, Dedup, Graph, Multimodal, Sessions, Similarity, TextAnalysis}
-import graft.index.Indexer
+import graft.index.{IndexTables, Indexer}
 import graft.search.{BM25, Search}
 import graft.sources.CorpusSource
 import graft.streaming.{EventStream, StreamingSessionizer}
@@ -47,20 +47,14 @@ object SparkEntry {
     * per tail query against 0.05-0.18 s of jobs). Plan-level reuse
     * ONLY: the memo holds the resolved relation (file list + schema —
     * KB-scale metadata); every action still scans the parquet bytes
-    * from disk, nothing row-shaped is cached. Stopped sessions drop
-    * their entries (the DirMemo hygiene). ScaleBench scratch dirs are
-    * written once per run before any read, so a memoized listing can
-    * never go stale within a session.
+    * from disk, nothing row-shaped is cached. The listing is taken at
+    * first use: a caller that rewrites a dir's files mid-session calls
+    * [[SessionMemo.resetAll]] before reading it again.
     */
-  private val tblMemo = scala.collection.mutable.LinkedHashMap
-    .empty[(SparkSession, String, String), DataFrame]
+  private val scanMemo = new SessionMemo[(String, String), DataFrame]((s, k) =>
+    s.read.parquet(s"${k._1}/${k._2}.parquet"))
   private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    tblMemo.synchronized {
-      tblMemo.filterInPlace { case ((owner, _, _), _) =>
-        !owner.sparkContext.isStopped }
-      tblMemo.getOrElseUpdate((s, dir, name),
-        s.read.parquet(s"$dir/$name.parquet"))
-    }
+    scanMemo(s, (dir, name))
 
   /** The driver's `events.parquet` has shipped `ts` as TIMESTAMP(NANOS)
     * (read as raw long under the legacy nanosAsLong conf) and as
@@ -156,7 +150,7 @@ object SparkEntry {
         .groupBy(col("x.doc_id").as("doc_id"))
         .agg((count(col("y.doc_id")) + 1).as("r"))
     }
-    val t = builtIndex(s, dir, stem = false)
+    val t = builtIndex(s, dir)
     val bmTop = Search.scoreTerms(t, SearchTerms)
       .withColumn("score", round(col("score"), 4))
       .orderBy(col("score").desc, col("doc_id").asc).limit(50)
@@ -202,9 +196,12 @@ object SparkEntry {
     * must read back (pre-stemmed token fixture, serving artifacts). The
     * producing query writes here FIRST, then both engines read the same
     * files — so the oracle tracks whatever sfDir the gate ran, with no
-    * hardcoded scale factor in the derived data.
+    * hardcoded scale factor in the derived data. Resolved against the
+    * working directory like [[ReceiptsDir]], so each checkout writes its
+    * own `work/`, and kept absolute (r9 ADVICE).
     */
-  private[graft] val WorkDir = "/root/repo/work"
+  private[graft] val WorkDir: String =
+    new java.io.File(sys.props.getOrElse("user.dir", "."), "work").getAbsolutePath
   private[graft] val StemmedFlatPath = s"$WorkDir/stemmed_flat.parquet"
   private[graft] val ArtifactsPath = s"$WorkDir/artifacts"
 
@@ -243,77 +240,15 @@ object SparkEntry {
     Tokenizer.tokenize("sorted merges tables quickly", stem = true).distinct
   private[graft] val StemmedTermsSql = StemmedTerms.map(t => s"'$t'").mkString(", ")
 
-  /** Serving-path index, built once per (sfDir, stem) and reused by the
-    * query-path entries — faithful to the reference, whose app loads
-    * PREBUILT index artifacts and never re-indexes per query
-    * (`pyapp.py:30-37`, `@st.cache_resource`). The indexing operators
-    * (g1–g5, tok_*) deliberately do NOT use this cache: they measure the
-    * indexing pipeline itself.
+  /** Serving-path (unstemmed) index, built once per (session, sfDir)
+    * and reused by the query-path entries — faithful to the reference,
+    * whose app loads PREBUILT index artifacts and never re-indexes per
+    * query (`pyapp.py:30-37`, `@st.cache_resource`). The indexing
+    * operators (g1–g5, tok_*) deliberately do NOT use this cache: they
+    * measure the indexing pipeline itself.
     */
-  private val MaxCachedIndexes = 4
-  private val indexCache = scala.collection.mutable.LinkedHashMap
-    .empty[(SparkSession, String, Boolean), graft.index.IndexTables]
-  private[graft] def builtIndex(s: SparkSession, dir: String,
-      stem: Boolean): graft.index.IndexTables =
-    indexCache.synchronized {
-      // keyed by the owning session's reference, as in [[DirMemo]]: a
-      // restarted session is never served tables bound to a stopped one,
-      // and entries of stopped sessions are dropped without unpersist
-      // (their blocks died with the context). Another LIVE session's index
-      // stays pinned: its tables may already be in use. Bounded FIFO —
-      // the evicted entry unpersists its flat-words cache so a long-lived
-      // session does not leak persisted RDDs.
-      indexCache.filterInPlace { case ((owner, _, _), _) => !owner.sparkContext.isStopped }
-      val key = (s, dir, stem)
-      if (!indexCache.contains(key) && indexCache.size >= MaxCachedIndexes) {
-        val (oldKey, old) = indexCache.head
-        try old.flatWords.unpersist(false) catch { case _: Throwable => () }
-        indexCache.remove(oldKey)
-      }
-      indexCache.getOrElseUpdate(key,
-        Indexer.build(docs(s, dir).select("doc_id", "text"), stem))
-    }
-
-  /** Serve-once memo for a `localCheckpoint`-ed DataFrame built per
-    * (session, sfDir) — the pattern [[builtIndex]] established, factored
-    * out (r5 grew three users): entries of STOPPED sessions are dropped
-    * without unpersist (their blocks died with the context); entries of
-    * other LIVE sessions are never unpersisted out from under
-    * already-handed-out DataFrames — checkpointed frames cannot be
-    * recomputed. An entry is served only to the exact session object that
-    * built it (keys use SparkSession's default reference equality — no
-    * identityHashCode collisions), and the cache is keyed by
-    * (session, dir) — r6 ADVICE: a dir-only key held ONE entry per dir,
-    * so a second live session requesting the same dir evicted the first
-    * session's entry without unpersist, leaking its localCheckpoint
-    * blocks until that session stopped. Now concurrent live sessions
-    * each hold their own entry and never evict each other's.
-    */
-  private[graft] final class DirMemo(build: (SparkSession, String) => DataFrame) {
-    private val cache =
-      scala.collection.mutable.LinkedHashMap.empty[(SparkSession, String), DataFrame]
-    def apply(s: SparkSession, dir: String): DataFrame = synchronized {
-      cache.filterInPlace { case ((owner, _), _) => !owner.sparkContext.isStopped }
-      cache.getOrElseUpdate((s, dir), build(s, dir))
-    }
-    /** Fill the slot with an externally-built frame if (and only if)
-      * it is empty — lets a composite build donate a sub-artifact it
-      * computed anyway, instead of this memo re-running its own build
-      * from scratch on the next read (the DSIR weights build donates
-      * the ratio model it derives from the same tagged features).
-      */
-    def seed(s: SparkSession, dir: String)(df: => DataFrame): DataFrame =
-      synchronized {
-        cache.filterInPlace { case ((owner, _), _) => !owner.sparkContext.isStopped }
-        cache.getOrElseUpdate((s, dir), df)
-      }
-    def reset(): Unit = synchronized {
-      cache.values.foreach { df =>
-        org.apache.spark.sql.graftshim.ColumnShim.unpersistCheckpoint(df)
-      }
-      cache.clear()
-    }
-  }
+  private[graft] val builtIndex = new SessionMemo[String, IndexTables]((s, dir) =>
+    Indexer.build(docs(s, dir).select("doc_id", "text"), stem = false))
 
   /** Hashed 3-shingle rows (doc_id, shingle) over the corpus, shared by
     * the whole dedup family (minhash pairs, adjacent-pair Jaccard): the
@@ -321,7 +256,7 @@ object SparkEntry {
     * them, so it runs once per (session, sfDir) and is localCheckpoint-ed
     * (eager, lineage-free — a few MB of 8-byte shingle hashes).
     */
-  private val sharedShingleRows = new DirMemo((s, dir) =>
+  private val sharedShingleRows = new SessionMemo[String, DataFrame]((s, dir) =>
     Dedup.shingleRows(docs(s, dir), k = 3, hashed = true).localCheckpoint())
 
   /** Controlled-overlap LSH calibration pairs — each doc against its
@@ -333,7 +268,7 @@ object SparkEntry {
     * shared by `dedup_lsh_tuning` and `dedup_lsh_plan` (one build per
     * session×dir; the two signature aggs are the only heavy stages).
     */
-  private val lshPairsMemo = new DirMemo((s, dir) => {
+  private val lshPairsMemo = new SessionMemo[String, DataFrame]((s, dir) => {
     val P = Dedup.MinhashP
     val (pa, pb) = Dedup.perms(32)
     val hv = Caches.persist(sharedShingleRows(s, dir)
@@ -375,7 +310,7 @@ object SparkEntry {
     * verify pipeline before r6. The pair set is tiny (near-dup pairs);
     * checkpointing it costs KBs.
     */
-  private val sharedMinhashPairs = new DirMemo((s, dir) =>
+  private val sharedMinhashPairs = new SessionMemo[String, DataFrame]((s, dir) =>
     Dedup.minhashPairs(docs(s, dir), k = 3, numHashes = 32, bands = 16,
         threshold = 0.8, preShingleRows = Some(sharedShingled(s, dir)))
       .localCheckpoint())
@@ -389,7 +324,7 @@ object SparkEntry {
     * block-manager read, not a recompute — the same serve-once pattern as
     * [[builtIndex]].
     */
-  private val ccMemo = new DirMemo((s, dir) =>
+  private val ccMemo = new SessionMemo[String, DataFrame]((s, dir) =>
     // canonicalEdges: minhashPairs emits doc_a < doc_b with
     // dropDuplicates(doc_a, doc_b) — unique, id-ordered, loop-free —
     // so CC's post-union dedup Exchange is skippable (r18)
@@ -406,7 +341,7 @@ object SparkEntry {
     * dedup memos: the bigram-count chain is deterministic per dir and
     * its result is one small row per document.
     */
-  private val lmScoresMemo = new DirMemo((s, dir) =>
+  private val lmScoresMemo = new SessionMemo[String, DataFrame]((s, dir) =>
     lmScores(s, dir).localCheckpoint())
 
   /** The corpus's df ≤ 1000 capped posting table — the STANDING INDEX of
@@ -417,7 +352,7 @@ object SparkEntry {
     * trick. Same serve-once economics as [[semanticDropsMemo]]; the
     * checkpoint holds (shingle, doc_id, df) rows — a few MB at sf0.1.
     */
-  private val cappedPostingsMemo = new DirMemo((s, dir) =>
+  private val cappedPostingsMemo = new SessionMemo[String, DataFrame]((s, dir) =>
     Dedup.cappedPostings(sharedShingleRows(s, dir), maxDf = 1000)
       .localCheckpoint())
 
@@ -432,7 +367,7 @@ object SparkEntry {
     * stands in for that standing state. Table name and path are unique
     * per (session, sfDir) — the sink_bucketed_join concurrency rule.
     */
-  private val corpusFpBucketedMemo = new DirMemo((s, dir) => {
+  private val corpusFpBucketedMemo = new SessionMemo[String, DataFrame]((s, dir) => {
     val bucket = pmod(Dedup.md5Hash60(col("doc_id").cast("string")), lit(10L))
     val name = s"corpus_fp_bkt_${scratchTag(s, dir)}"
     docs(s, dir).filter(bucket =!= 0)
@@ -481,10 +416,10 @@ object SparkEntry {
     * (`Similarity.ivfAssign`), which is what lets callers pass
     * knownCents = 8 without a count job.
     */
-  private val frozenCentsMemo = new DirMemo((s, dir) =>
+  private val frozenCentsMemo = new SessionMemo[String, DataFrame]((s, dir) =>
     graft.ext.Similarity.ivfCentroids(embCorpus(s, dir), nCentroids = 8,
       lloydIters = 1).localCheckpoint())
-  private val frozenCellsMemo = new DirMemo((s, dir) => {
+  private val frozenCellsMemo = new SessionMemo[String, DataFrame]((s, dir) => {
     val corpus = embCorpus(s, dir)
     graft.ext.Similarity.ivfAssignWith(corpus, frozenCentsMemo(s, dir),
         knownCents = Some(8L))
@@ -513,7 +448,7 @@ object SparkEntry {
         col("source").isin("src0", "src1").as("tgt")), Seq("doc_id")))
   }
 
-  private val dsirModelMemo = new DirMemo((s, dir) =>
+  private val dsirModelMemo = new SessionMemo[String, DataFrame]((s, dir) =>
     graft.ext.Dsir.ratioModel(dsirTagged(s, dir), buckets = 1024)
       .localCheckpoint())
 
@@ -524,7 +459,7 @@ object SparkEntry {
     * (r16 VERDICT #7). One tagged build feeds model AND weights; the
     * checkpointed artifact is doc-grain (one row per scored doc).
     */
-  private val dsirWeightsMemo = new DirMemo((s, dir) => {
+  private val dsirWeightsMemo = new SessionMemo[String, DataFrame]((s, dir) => {
     val tagged = dsirTagged(s, dir)
     // seed the model memo from THIS tagged build — otherwise an
     // isolated weights build (bench rep after a cache reset) would
@@ -552,7 +487,7 @@ object SparkEntry {
     * almost nothing and every consumer starts from lineage-free
     * blocks.
     */
-  private val copurchaseEdgesMemo = new DirMemo((s, dir) => {
+  private val copurchaseEdgesMemo = new SessionMemo[String, DataFrame]((s, dir) => {
     // no pre-distinct: collect_set already deduplicates per order with
     // map-side partial aggregation, so the former distinct() was a full
     // extra Exchange of the (okey, pk) pairs for the identical set table
@@ -574,7 +509,7 @@ object SparkEntry {
     * over 2E exploded rows every time (the copurchaseEdgesMemo
     * economics).
     */
-  private val lpaLabelsMemo = new DirMemo((s, dir) =>
+  private val lpaLabelsMemo = new SessionMemo[String, DataFrame]((s, dir) =>
     Graph.labelPropagation(copurchaseEdgesMemo(s, dir), iterations = 4,
         canonicalEdges = true)
       .localCheckpoint())
@@ -584,7 +519,7 @@ object SparkEntry {
     * (r11 VERDICT #6 / ADVICE trigger: a single consumer didn't justify
     * the checkpoint; the second would have doubled the rebuild).
     */
-  private val lpaWeightedLabelsMemo = new DirMemo((s, dir) =>
+  private val lpaWeightedLabelsMemo = new SessionMemo[String, DataFrame]((s, dir) =>
     Graph.labelPropagation(copurchaseEdgesMemo(s, dir), iterations = 4,
         weighted = true, canonicalEdges = true)
       .localCheckpoint())
@@ -593,7 +528,7 @@ object SparkEntry {
     * `graph_louvain_move` (sizes) and `graph_louvain_modularity`
     * (partition quality), the lpaWeightedLabelsMemo economics.
     */
-  private val louvainLabelsMemo = new DirMemo((s, dir) =>
+  private val louvainLabelsMemo = new SessionMemo[String, DataFrame]((s, dir) =>
     Graph.louvainMoveLabels(copurchaseEdgesMemo(s, dir)).localCheckpoint())
 
   /** Composed two-level Louvain labels (node, c1 = phase-1 community,
@@ -602,7 +537,7 @@ object SparkEntry {
     * `graph_louvain2_modularity` (partition quality); node-bounded,
     * KBs checkpointed.
     */
-  private val louvainPhase2LabelsMemo = new DirMemo((s, dir) => {
+  private val louvainPhase2LabelsMemo = new SessionMemo[String, DataFrame]((s, dir) => {
     val l1 = louvainLabelsMemo(s, dir)
     val l2 = Graph.louvainMoveLabelsWithSelfLoops(
       Graph.louvainCondense(copurchaseEdgesMemo(s, dir), l1))
@@ -619,16 +554,8 @@ object SparkEntry {
     * economics; each face is small — ≤ 11 literal rows / one
     * node-sized pinned frame).
     */
-  private val louvainFullRunMemo = scala.collection.mutable.LinkedHashMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-  private def louvainFullRun(s: SparkSession,
-      dir: String): (DataFrame, DataFrame) = louvainFullRunMemo.synchronized {
-    louvainFullRunMemo.filterInPlace {
-      case ((owner, _), _) => !owner.sparkContext.isStopped
-    }
-    louvainFullRunMemo.getOrElseUpdate((s, dir),
-      Graph.louvainFullRun(copurchaseEdgesMemo(s, dir), maxLevels = 10))
-  }
+  private val louvainFullRun = new SessionMemo[String, (DataFrame, DataFrame)](
+    (s, dir) => Graph.louvainFullRun(copurchaseEdgesMemo(s, dir), maxLevels = 10))
 
   /** The lowercase a–z word stream of the corpus — large-BPE's input
     * (and the vocabulary aggregate's, via groupBy word).
@@ -644,17 +571,8 @@ object SparkEntry {
     * and ScaleBench all read the same driver artifact. The ladder is
     * merge-count-bounded (≤ 128 × ~8 chars), not corpus-sized.
     */
-  private val bpeLargeMemo = scala.collection.mutable.LinkedHashMap
-    .empty[(SparkSession, String), Seq[graft.ext.BpeTrainer.LargeMerge]]
-  private def bpeLargeLadder(s: SparkSession,
-      dir: String): Seq[graft.ext.BpeTrainer.LargeMerge] =
-    bpeLargeMemo.synchronized {
-      bpeLargeMemo.filterInPlace {
-        case ((owner, _), _) => !owner.sparkContext.isStopped
-      }
-      bpeLargeMemo.getOrElseUpdate((s, dir),
-        graft.ext.BpeTrainer.trainVocab(bpeWords(s, dir), maxMerges = 128))
-    }
+  private val bpeLargeLadder = new SessionMemo[String, Seq[graft.ext.BpeTrainer.LargeMerge]](
+    (s, dir) => graft.ext.BpeTrainer.trainVocab(bpeWords(s, dir), maxMerges = 128))
 
   /** Post-split IVF assignment (vec_id, cluster) — the flagged ∪
     * top-2-heaviest split of the standing Lloyd-1 index
@@ -662,7 +580,7 @@ object SparkEntry {
     * occupancy audit) and `emb_ivf_split_recall` (the read-path
     * check); node-bounded, KBs checkpointed.
     */
-  private val ivfSplitMemo = new DirMemo((s, dir) => {
+  private val ivfSplitMemo = new SessionMemo[String, DataFrame]((s, dir) => {
     val e = tbl(s, dir, "embeddings").select("vec_id", "embedding")
     val assigned = Caches.persist(
       Similarity.ivfAssign(e, nCentroids = 8, lloydIters = 1)
@@ -686,7 +604,7 @@ object SparkEntry {
     * already shares `mlNaiveBayesSql`); a rebuild pays the full
     * tokenize + train + dense-score pipeline every time.
     */
-  private val nbConfusionMemo = new DirMemo((s, dir) =>
+  private val nbConfusionMemo = new SessionMemo[String, DataFrame]((s, dir) =>
     graft.ext.NaiveBayes.confusion(
       docs(s, dir).select(col("doc_id"), col("lang").as("label"),
         explode(TextAnalysis.rawTokens(col("text"))).as("w")),
@@ -701,8 +619,8 @@ object SparkEntry {
     * cappedPostingsMemo standing-artifact economics); vocabulary-bounded
     * rows, KBs checkpointed.
     */
-  private val termBoundsMemo = new DirMemo((s, dir) =>
-    Search.termBounds(builtIndex(s, dir, stem = false)).localCheckpoint())
+  private val termBoundsMemo = new SessionMemo[String, DataFrame]((s, dir) =>
+    Search.termBounds(builtIndex(s, dir)).localCheckpoint())
 
   /** The LTR feature matrix for the standing query — BM25 top-50
     * candidates with lexical + semantic features (the
@@ -711,8 +629,8 @@ object SparkEntry {
     * at any corpus size, so the checkpoint is KBs and every consumer's
     * post-retrieval work is constant.
     */
-  private val ltrFeaturesMemo = new DirMemo((s, dir) => {
-    val t = builtIndex(s, dir, stem = false)
+  private val ltrFeaturesMemo = new SessionMemo[String, DataFrame]((s, dir) => {
+    val t = builtIndex(s, dir)
     val top = Caches.persist(Search.scoreTerms(t, SearchTerms)
       .withColumn("bm25", round(col("score"), 4)).drop("score")
       .orderBy(col("bm25").desc, col("doc_id").asc).limit(50))
@@ -768,7 +686,7 @@ object SparkEntry {
     * decode + hash + banded join runs once (the sharedMinhashPairs
     * economics). Pair-bounded rows; KBs–MBs checkpointed.
     */
-  private val phashNearPairsMemo = new DirMemo((s, dir) =>
+  private val phashNearPairsMemo = new SessionMemo[String, DataFrame]((s, dir) =>
     Dedup.hammingNearDup(
       Multimodal.averageHash(Multimodal.ppmTable(docs(s, dir)), grid = 8),
       idCol = "media_id", hashCol = "phash",
@@ -785,7 +703,7 @@ object SparkEntry {
     * checkpointed so a later (session, dir) overwrite of the shared
     * path can never be lazily re-read by an earlier consumer.
     */
-  private val stemmedFlatMemo = new DirMemo((s, dir) => {
+  private val stemmedFlatMemo = new SessionMemo[String, DataFrame]((s, dir) => {
     Indexer.flatWords(docs(s, dir).select("doc_id", "text"), stem = true)
       .write.mode("overwrite").parquet(StemmedFlatPath)
     s.read.parquet(StemmedFlatPath).localCheckpoint()
@@ -798,27 +716,18 @@ object SparkEntry {
     * (1.65 s driver vs 0.76 s idle — the rebuild, not box noise;
     * ProbeQueries receipts in docs/PLANS.md). With the tables cached
     * the per-rep cost is the scoring plan alone, exactly like
-    * `bm25_search` rides [[builtIndex]]'s cache. Session-keyed like
-    * [[builtIndex]] (a restarted session must not read tables bound to
-    * a stopped one); the underlying checkpoint's lifecycle stays with
-    * [[stemmedFlatMemo]].
+    * `bm25_search` rides [[builtIndex]]'s cache; the underlying
+    * checkpoint's lifecycle stays with [[stemmedFlatMemo]].
     */
-  private val stemmedIndexCache =
-    scala.collection.mutable.LinkedHashMap.empty[(String, String), graft.index.IndexTables]
-  private def stemmedIndex(s: SparkSession, dir: String): graft.index.IndexTables =
-    stemmedIndexCache.synchronized {
-      val sessionKey = System.identityHashCode(s).toString
-      stemmedIndexCache.filterInPlace { case ((sk, _), _) => sk == sessionKey }
-      stemmedIndexCache.getOrElseUpdate((sessionKey, dir),
-        Indexer.buildFromFlat(stemmedFlatMemo(s, dir)))
-    }
+  private[graft] val stemmedIndex = new SessionMemo[String, IndexTables]((s, dir) =>
+    Indexer.buildFromFlat(stemmedFlatMemo(s, dir)))
 
   /** The walk table itself is ~100 rows — checkpointed once per
     * (session, sfDir) so `graph_walk_skipgram` reuses
     * `graph_random_walk`'s E-sized adjacency ranking instead of
     * rebuilding it (the lpaLabelsMemo economics).
     */
-  private val walksMemo = new DirMemo((s, dir) =>
+  private val walksMemo = new SessionMemo[String, DataFrame]((s, dir) =>
     copurchaseWalks(s, dir).localCheckpoint())
 
   /** Seeded deterministic random walks over the symmetric co-purchase
@@ -903,7 +812,7 @@ object SparkEntry {
     * a given dir, and its result is a few hundred rows; checkpointing it
     * costs KBs while a rebuild pays the CC round latency every time.
     */
-  private val semanticDropsMemo = new DirMemo((s, dir) => {
+  private val semanticDropsMemo = new SessionMemo[String, DataFrame]((s, dir) => {
     val emb = tbl(s, dir, "embeddings").select("vec_id", "embedding")
     val n = emb.count()
     val c = math.max(8, math.ceil(n / 64.0).toInt)
@@ -911,41 +820,6 @@ object SparkEntry {
         corpusCount = Some(n))
       .localCheckpoint()
   })
-
-  /** Drop the shared serve-once caches (CC, minhash pairs, shingle rows),
-    * freeing their checkpoint blocks — ONLY for harnesses ([[ScaleBench]])
-    * that must time the REAL per-run cost and guarantee no returned frame
-    * is reused after the reset.
-    */
-  private[graft] def resetSharedCaches(): Unit = {
-    copurchaseEdgesMemo.reset()
-    lpaLabelsMemo.reset()
-    lpaWeightedLabelsMemo.reset()
-    louvainLabelsMemo.reset()
-    louvainPhase2LabelsMemo.reset()
-    stemmedFlatMemo.reset()
-    stemmedIndexCache.synchronized(stemmedIndexCache.clear())
-    phashNearPairsMemo.reset()
-    termBoundsMemo.reset()
-    ltrFeaturesMemo.reset()
-    nbConfusionMemo.reset()
-    walksMemo.reset()
-    ccMemo.reset()
-    sharedMinhashPairs.reset()
-    sharedShingleRows.reset()
-    lshPairsMemo.reset()
-    semanticDropsMemo.reset()
-    lmScoresMemo.reset()
-    cappedPostingsMemo.reset()
-    corpusFpBucketedMemo.reset()
-    frozenCellsMemo.reset()
-    frozenCentsMemo.reset()
-    dsirModelMemo.reset()
-    dsirWeightsMemo.reset()
-    ivfSplitMemo.reset()
-    louvainFullRunMemo.synchronized(louvainFullRunMemo.clear())
-    bpeLargeMemo.synchronized(bpeLargeMemo.clear())
-  }
 
   /** Linear-interpolated quantile estimate off an equi-width bin
     * histogram (shared by `agg_quantile_histogram` and its streaming
@@ -979,10 +853,10 @@ object SparkEntry {
     * sequentially, leaving most of local[N] idle during each small
     * job's tail. Results come back in input order, so output is
     * deterministic regardless of completion order; each task body is an
-    * independent Spark action chain (Caches / DirMemo registries are
-    * synchronized). Pool is sized to the task count (callers pass ≤ 8)
-    * and torn down before returning; failures propagate like the
-    * sequential form (first exception rethrown).
+    * independent Spark action chain (the [[Caches]] registry and every
+    * [[SessionMemo]] are synchronized). Pool is sized to the task count
+    * (callers pass ≤ 8) and torn down before returning; failures
+    * propagate like the sequential form (first exception rethrown).
     */
   private def parActions[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
     if (xs.size <= 1) return xs.map(f)
@@ -1156,7 +1030,7 @@ object SparkEntry {
 
   /** Spark-side BM25 top-10 with post-rounding deterministic order. */
   private def bm25Top10(s: SparkSession, dir: String): DataFrame = {
-    val t = builtIndex(s, dir, stem = false)
+    val t = builtIndex(s, dir)
     Search.scoreTerms(t, SearchTerms)
       .withColumn("score", round(col("score"), 4))
       .orderBy(col("score").desc, col("doc_id").asc)
@@ -1354,7 +1228,7 @@ object SparkEntry {
       // (Search.scoreTermsConjunctive — TF is (doc, word)-distinct,
       // so count(*) is the distinct-term count), so AND costs exactly
       // what OR costs. Top-10.
-      Search.scoreTermsConjunctive(builtIndex(s, dir, stem = false),
+      Search.scoreTermsConjunctive(builtIndex(s, dir),
           SearchTerms)
         .withColumn("score", round(col("score"), 4))
         .orderBy(col("score").desc, col("doc_id").asc)
@@ -1369,7 +1243,7 @@ object SparkEntry {
       // post-filter of a truncated list, which could under-fill the
       // page); cost = OR + one semi-join on the negated term's
       // postings.
-      val t = builtIndex(s, dir, stem = false)
+      val t = builtIndex(s, dir)
       val excluded = t.termFrequencies
         .filter(col("word") === "slow").select("doc_id")
       Search.scoreTerms(t, SearchTerms)
@@ -1387,7 +1261,7 @@ object SparkEntry {
       // bitwise-equal to bm25_search (the oracle IS bm25_search's SQL);
       // SearchPrunedSpec asserts the pruned path scores fewer postings
       // on a selective query.
-      Search.prunedTopK(builtIndex(s, dir, stem = false),
+      Search.prunedTopK(builtIndex(s, dir),
         termBoundsMemo(s, dir), SearchTerms)),
 
     "search_pruned_incremental" -> ((s, dir) => {
@@ -1435,7 +1309,7 @@ object SparkEntry {
     }),
 
     "j3_sql_bm25" -> ((s, dir) => {
-      val t = builtIndex(s, dir, stem = false)
+      val t = builtIndex(s, dir)
       t.termFrequencies.createOrReplaceTempView("term_frequencies")
       t.docLengths.createOrReplaceTempView("document_lengths")
       t.idfValues.createOrReplaceTempView("idf_values")
@@ -1457,7 +1331,7 @@ object SparkEntry {
       // `app.py`/`nltksearchv1.py` — SURVEY.md §3.3b): k1=1.5, natural-log
       // idf = ln((N-df+0.5)/(df+0.5)) with negatives floored to
       // 0.25 × average raw idf. Same engine, different (k1, idf) inputs.
-      val t = builtIndex(s, dir, stem = false)
+      val t = builtIndex(s, dir)
       val raw = t.idfValues.withColumn("raw",
         log((lit(t.nDocs.toDouble) - col("doc_freq") + 0.5) / (col("doc_freq") + 0.5)))
       val avgIdf = raw.agg(avg("raw")).head().getDouble(0)
@@ -1514,7 +1388,7 @@ object SparkEntry {
       // positional index's second consumer beside search_phrase. All
       // pair work is pool-bounded: postings are term-filtered and
       // semi-joined to 30 doc ids before the per-doc pair join.
-      val t = builtIndex(s, dir, stem = false)
+      val t = builtIndex(s, dir)
       val pool = Caches.persist(Search.scoreTerms(t, SearchTerms)
         .withColumn("score", round(col("score"), 4))
         .orderBy(col("score").desc, col("doc_id").asc).limit(30))
@@ -5260,7 +5134,7 @@ object SparkEntry {
       // broadcast: unlike the |query|-row IDF side in search, this joins
       // the WHOLE vocabulary — AQE picks broadcast while it fits and
       // falls back to a shuffle join at real-corpus vocab sizes.
-      val t = builtIndex(s, dir, stem = false)
+      val t = builtIndex(s, dir)
       val w = Window.partitionBy("doc_id")
         .orderBy(col("tfidf").desc, col("word").asc)
       t.termFrequencies
@@ -8965,7 +8839,7 @@ object SparkEntry {
       // |C|-bounded super-graph; ≤ maxLevels S4 scalar rounds (the
       // kmeansInertiaCurve pattern). maxLevels=10 matches the
       // oracle's unroll depth — a still-rising curve truncates
-      // identically on both sides. The run rides louvainFullRunMemo
+      // identically on both sides. The run rides louvainFullRun
       // (shared with graph_louvain_full_sizes).
       louvainFullRun(s, dir)._1.orderBy("level")
     }),
@@ -8992,7 +8866,7 @@ object SparkEntry {
       // Louvain partition — the per-community quality readout
       // modularity can't give: Q grades the partition globally, φ
       // exposes the individual leaky community (φ → 0 tight, φ → 1
-      // mostly boundary). Rides louvainFullRunMemo (one converged run
+      // mostly boundary). Rides louvainFullRun (one converged run
       // per session×dir, shared with both graph_louvain_full faces);
       // the plan is two label joins against the node-sized partition
       // map + two hash aggs — every count an exact BIGINT, the
@@ -9014,7 +8888,7 @@ object SparkEntry {
       // connected components over the intra-community edge set (inter-
       // community edges removed, so components can never cross
       // communities) and census components per community; n_components
-      // > 1 is the Leiden defect. Rides louvainFullRunMemo + the
+      // > 1 is the Leiden defect. Rides louvainFullRun + the
       // min-label CC kernel; CC rounds ∝ component diameter (small —
       // components are community-bounded). Edgeless nodes are their
       // own component (left join + coalesce to self). Top-15 by size —
@@ -9856,8 +9730,8 @@ object SparkEntry {
       // oracle is the same join from the raw parquet.
       val cat = s.catalog
       // table names and paths are unique per (session, sfDir): fixed
-      // names would let concurrent live sessions (which the DirMemo
-      // family explicitly supports) overwrite each other's tables
+      // names would let concurrent live sessions (which every
+      // SessionMemo explicitly supports) overwrite each other's tables
       // mid-scan
       val suffix = scratchTag(s, dir)
       def bucketed(src: DataFrame, name: String, key: String): DataFrame = {
@@ -10491,7 +10365,7 @@ object SparkEntry {
       // back, score, and join snippets from the LOADED text artifact —
       // result must be bitwise-identical to the build-then-search path,
       // so the oracle is the t1_search_snippet SQL.
-      val t = builtIndex(s, dir, stem = false)
+      val t = builtIndex(s, dir)
       Indexer.writeArtifacts(s, t, ArtifactsPath,
         opinionText = Some(docs(s, dir)
           .select(col("doc_id"), col("text").as("opinion_text"))),
@@ -10666,7 +10540,7 @@ object SparkEntry {
       // the aggregation every search UI renders next to the hits. The
       // result set is k-bounded, so the facet joins touch ≤50 rows;
       // the two dimensions union into one (facet, value, n) table.
-      val t = builtIndex(s, dir, stem = false)
+      val t = builtIndex(s, dir)
       val top = Caches.persist(Search.scoreTerms(t, SearchTerms)
         .withColumn("score", round(col("score"), 4))
         .orderBy(col("score").desc, col("doc_id").asc).limit(50)
@@ -10691,7 +10565,7 @@ object SparkEntry {
       // extraction touches one doc's postings; the rescore is the
       // standard retrieval shape; the 5-term list is collected
       // driver-side (S4) like any query rewrite.
-      val t = builtIndex(s, dir, stem = false)
+      val t = builtIndex(s, dir)
       val seed = 42L
       val terms = t.termFrequencies.filter(col("doc_id") === seed)
         .join(broadcast(t.idfValues.select("word", "idf")), Seq("word"))
@@ -10723,7 +10597,7 @@ object SparkEntry {
       // grain; the share denominator folds from the 16-row shard
       // table, never a second TF pass. Exact integers, emitted
       // unrounded per the r15 tie rule.
-      val t = builtIndex(s, dir, stem = false)
+      val t = builtIndex(s, dir)
       val perWord = t.termFrequencies
         .withColumn("shard",
           pmod(graft.ext.Dedup.md5Hash60(col("word")), lit(16L)))
@@ -10857,7 +10731,7 @@ object SparkEntry {
       // contributions 9dp-pinned before the ≤10-row sum; MRR/P@10 at
       // rel ≥ 2. Ranks within each ≤10-row result set come from a
       // window whose partitions are k-bounded by construction.
-      val t = builtIndex(s, dir, stem = false)
+      val t = builtIndex(s, dir)
       val scored = Caches.persist(t.termFrequencies
         .filter(col("word").isin(EvalTerms: _*))
         .join(broadcast(t.idfValues.filter(col("word").isin(EvalTerms: _*))
@@ -10903,7 +10777,7 @@ object SparkEntry {
       // selection loop runs driver-side on the collected pool tables
       // (the S4 scalar-materialize pattern; a production reranker does
       // exactly this on the serving head after retrieval fans in).
-      val t = builtIndex(s, dir, stem = false)
+      val t = builtIndex(s, dir)
       val pool = Caches.persist(Search.scoreTerms(t, SearchTerms)
         .withColumn("score", round(col("score"), 4))
         .orderBy(col("score").desc, col("doc_id").asc).limit(30))
@@ -11052,7 +10926,7 @@ object SparkEntry {
       // so expansion mining is a broadcast semi-join against 10 ids;
       // the 5-term list is collected driver-side (S4) exactly like a
       // production query rewriter.
-      val t = builtIndex(s, dir, stem = false)
+      val t = builtIndex(s, dir)
       val top10 = Search.scoreTerms(t, SearchTerms)
         .withColumn("score", round(col("score"), 4))
         .orderBy(col("score").desc, col("doc_id").asc).limit(10)
@@ -11094,7 +10968,7 @@ object SparkEntry {
       // the grid is |candidates|·|q| rows, never corpus × vocab.
       // Collection stats (cf_t, |C|) are exact integers; per-term
       // contributions are 9dp-pinned before the 4-term sum.
-      val t = builtIndex(s, dir, stem = false)
+      val t = builtIndex(s, dir)
       val mu = 2000.0
       val tfq = Caches.persist(t.termFrequencies
         .filter(col("word").isin(SearchTerms: _*)))

@@ -16,14 +16,14 @@ class BuiltIndexSpec extends AnyFunSuite with SparkSpec {
     Seq((1L, "merge sort merge"), (2L, "hash join sort")).toDF("doc_id", "text")
       .write.parquet(s"$dir/documents.parquet")
     val s2 = spark.newSession()
-    val first = SparkEntry.builtIndex(spark, dir, stem = false)
+    val first = SparkEntry.builtIndex(spark, dir)
     assert(first.flatWords.storageLevel != StorageLevel.NONE)
-    val second = SparkEntry.builtIndex(s2, dir, stem = false)
+    val second = SparkEntry.builtIndex(s2, dir)
     assert(second ne first)
     assert(first.flatWords.storageLevel != StorageLevel.NONE)
     // each session is served its own entry again
-    assert(SparkEntry.builtIndex(spark, dir, stem = false) eq first)
-    assert(SparkEntry.builtIndex(s2, dir, stem = false) eq second)
+    assert(SparkEntry.builtIndex(spark, dir) eq first)
+    assert(SparkEntry.builtIndex(s2, dir) eq second)
     first.flatWords.unpersist(false)
   }
 }
