@@ -1,23 +1,31 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.storage.StorageLevel
 
 import graft.index.IndexTables
 
-/** Registry for short-lived persisted DataFrames (VERDICT.md r2 "cache
-  * hygiene"): operators that persist intermediate tables referenced by
-  * multiple plan branches (shingle sets, minhash signatures) register them
-  * here, and the harness mains ([[Verify]], [[Bench]]) call
-  * [[clearPersisted]] after materializing each query — so a long-lived
-  * session (or a 57-query bench run) does not accumulate persisted RDDs.
-  *
-  * Unpersisting is always SAFE, never wrong: a cleared table is lazily
-  * recomputed if a later plan still references it. Session-lived
-  * artifacts are [[SessionMemo]]s, which this clearing leaves alone.
+/** Query-scoped storage, and the measured single-task gate. QUERY scope
+  * is [[persist]] and [[pinned]], freed by [[clearPersisted]], which the
+  * harness mains ([[Verify]], [[Bench]]) call after each query ([[unpin]]
+  * frees a pin earlier). SESSION scope is a [[SessionMemo]], left alone
+  * here. A freed persist is lazily recomputed; a freed pin is not (no
+  * lineage: "Checkpoint block ... not found"), so nothing that outlives
+  * the query may read a pin.
   */
 object Caches {
   private val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  private val pinnedRdds = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+
+  /** At or under this many measured rows a stage runs as one task (r18):
+    * fanning KB-scale frames over every core paid per-task cost for nothing.
+    */
+  val SingleTaskRows = 262144L
+
+  def singleTask(rows: Long): Boolean = rows <= SingleTaskRows
 
   /** Persist `df` (MEMORY_AND_DISK) and track it for [[clearPersisted]]. */
   def persist(df: DataFrame): DataFrame = synchronized {
@@ -26,42 +34,51 @@ object Caches {
     p
   }
 
-  /** Unpersist (non-blocking) and forget every tracked DataFrame. */
+  /** Unpersist (non-blocking) and forget every tracked frame and pin. */
   def clearPersisted(): Unit = synchronized {
     persisted.foreach(df => try df.unpersist(false) catch { case _: Throwable => () })
-    pinnedRdds.foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
+    pinnedRdds.foreach(free)
     persisted.clear()
     pinnedRdds.clear()
   }
 
-  private val pinnedRdds =
-    scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
-
-  /** PIN iteration state: eager `localCheckpoint` + a lineage-free
-    * `createDataFrame(rdd, schema)` wrapper (the louvainFullRun /
-    * spectral-fiedler pattern, centralized in r18) — so a loop that
-    * takes driver actions per round never re-analyzes a growing plan.
-    * Unlike the in-loop `unpersistCheckpoint` hygiene, the checkpoint
-    * RDD is REGISTERED here, so pins that the returned (lazy) plan
-    * still references are freed by the harness's per-query
-    * [[clearPersisted]] instead of leaking one RDD per rep.
+  /** PIN iteration state (an eager `localCheckpoint`), so a loop taking
+    * driver actions per round never re-analyzes a growing plan.
     */
   def pinned(df: DataFrame): DataFrame = track(df.localCheckpoint(true))
 
-  /** Register the checkpoint behind `cp` for [[clearPersisted]] and
-    * return the frame to serve. The PERSISTED rdd is inside cp's
-    * LogicalRDD plan — `cp.rdd` would be a fresh deserializing wrapper
-    * whose unpersist is a no-op. A plan with no LogicalRDD has no rdd to
-    * reach, so the frame itself is held through [[persist]] instead:
-    * every pin is released by [[clearPersisted]].
+  /** Free a pin (or a [[persist]]) now and forget it; no plan may read it after. */
+  def unpin(df: DataFrame): Unit = synchronized {
+    checkpointRdd(df) match {
+      case Some(r) => pinnedRdds -= r; free(r)
+      case None =>
+        persisted -= df
+        try df.unpersist(false) catch { case _: Throwable => () }
+    }
+  }
+
+  /** Register the checkpoint behind `cp`; serve its persisted rdd as a
+    * fresh leaf (new attribute ids, no origin statistics, which pins fed
+    * by pins would compound — see [[graft.ext.Graph.louvainFull]]). A
+    * plan with no checkpoint rdd is held through [[persist]] instead.
     */
   private[graft] def track(cp: DataFrame): DataFrame =
-    org.apache.spark.sql.graftshim.ColumnShim.logicalPlan(cp) match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
+    ColumnShim.logicalPlan(cp) match {
+      case l: LogicalRDD =>
         synchronized { pinnedRdds += l.rdd }
-        cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
+        ColumnShim.freshLeaf(cp.sparkSession, l)
       case _ => persist(cp)
     }
+
+  /** The persisted rdd of a checkpointed frame (`unpersist` cannot reach it). */
+  private[graft] def checkpointRdd(df: DataFrame): Option[RDD[_]] =
+    ColumnShim.logicalPlan(df) match {
+      case l: LogicalRDD => Some(l.rdd)
+      case _ => None
+    }
+
+  private[graft] def free(r: RDD[_]): Unit =
+    try r.unpersist(false) catch { case _: Throwable => () }
 }
 
 /** Session-scoped memo: one value per (session, key), built on first use
@@ -72,7 +89,8 @@ object Caches {
   * hold their own entry and never evict each other's; entries of STOPPED
   * sessions are dropped without release (their blocks died with the
   * context). The query-scoped [[Caches.clearPersisted]] leaves these
-  * entries alone; [[SessionMemo.resetAll]] releases them.
+  * entries alone; [[SessionMemo.resetAll]] releases them. A frame-valued
+  * build ends in its own `localCheckpoint`, never in a query-scoped pin.
   */
 final class SessionMemo[K, V](build: (SparkSession, K) => V) {
   private val cache = scala.collection.mutable.HashMap.empty[(SparkSession, K), V]
@@ -109,12 +127,13 @@ object SessionMemo {
   def resetAll(): Unit = synchronized { all.foreach(_.reset()) }
 
   /** What an entry pins follows from its type: a checkpointed frame its
-    * checkpoint blocks, a built index its persisted flat words. A
-    * resolved scan (a file listing) or a driver-side value pins nothing.
+    * checkpoint blocks, a pair of frames both, a built index its
+    * persisted flat words. A resolved scan (a file listing) or a
+    * driver-side value pins nothing.
     */
   private def release(v: Any): Unit = v match {
-    case df: DataFrame @unchecked =>
-      org.apache.spark.sql.graftshim.ColumnShim.unpersistCheckpoint(df)
+    case df: DataFrame @unchecked => Caches.checkpointRdd(df).foreach(Caches.free)
+    case (a, b) => release(a); release(b)
     case t: IndexTables =>
       try t.flatWords.unpersist(false) catch { case _: Throwable => () }
     case _ => ()

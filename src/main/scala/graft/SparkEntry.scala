@@ -190,7 +190,9 @@ object SparkEntry {
   private[graft] val EvalTerms = Seq("filter", "join", "merge", "scan", "table", "vector")
   private[graft] val EvalTermsSql = EvalTerms.map(t => s"'$t'").mkString(", ")
 
-  private[graft] val FixturePath = "/root/repo/src/main/resources/cap_fixture.jsonl"
+  /** The bundled CAP fixture, resolved against `user.dir` like [[WorkDir]]. */
+  private[graft] val FixturePath: String = new java.io.File(
+    sys.props.getOrElse("user.dir", "."), "src/main/resources/cap_fixture.jsonl").getAbsolutePath
 
   /** Scratch dir for query-produced fixtures/artifacts that oracle SQL
     * must read back (pre-stemmed token fixture, serving artifacts). The
@@ -319,10 +321,9 @@ object SparkEntry {
     * shared by `dedup_components` and `pipeline_dedup_components` (r4
     * VERDICT #4: the two CC-bearing queries were 16% of the bench, each
     * re-running the identical minhash-pairs → min-label+pointer-jump
-    * supersteps). [[graft.ext.Graph.connectedComponents]] returns
-    * `localCheckpoint`-ed (eager, lineage-free) labels, so reuse costs a
-    * block-manager read, not a recompute — the same serve-once pattern as
-    * [[builtIndex]].
+    * supersteps). The memo checkpoints the labels itself (CC's own pins
+    * are query-scoped), so reuse costs a block-manager read, not a
+    * recompute — the same serve-once pattern as [[builtIndex]].
     */
   private val ccMemo = new SessionMemo[String, DataFrame]((s, dir) =>
     // canonicalEdges: minhashPairs emits doc_a < doc_b with
@@ -331,7 +332,7 @@ object SparkEntry {
     graft.ext.Graph.connectedComponents(
       sharedMinhashPairs(s, dir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst")),
-      canonicalEdges = true))
+      canonicalEdges = true).localCheckpoint())
   private def nearDupComponents(s: SparkSession, dir: String): DataFrame =
     ccMemo(s, dir)
 
@@ -552,10 +553,12 @@ object SparkEntry {
     * `graph_louvain_full` and `graph_louvain_full_sizes` so the
     * 10-level driver loop runs once (the louvainPhase2LabelsMemo
     * economics; each face is small — ≤ 11 literal rows / one
-    * node-sized pinned frame).
+    * node-sized frame, each checkpointed here over the run's pins).
     */
-  private val louvainFullRun = new SessionMemo[String, (DataFrame, DataFrame)](
-    (s, dir) => Graph.louvainFullRun(copurchaseEdgesMemo(s, dir), maxLevels = 10))
+  private val louvainFullRun = new SessionMemo[String, (DataFrame, DataFrame)]((s, dir) => {
+    val (levels, labels) = Graph.louvainFullRun(copurchaseEdgesMemo(s, dir), maxLevels = 10)
+    (levels.localCheckpoint(), labels.localCheckpoint())
+  })
 
   /** The lowercase a–z word stream of the corpus — large-BPE's input
     * (and the vocabulary aggregate's, via groupBy word).
@@ -6164,18 +6167,13 @@ object SparkEntry {
       def q6d(c: Column) = floor(c * lit(1000000.0) + lit(0.5)).cast("long")
       val seed = emb.orderBy(col("vec_id").asc).limit(1)
       val seedRow = seed.select("vec_id", "label").head()
-      // iteration state is PINNED (eager localCheckpoint + lineage-free
-      // wrapper), not lazily persisted: cur_t chains on cur_{t−1}, so
-      // with 2 actions per step Catalyst re-analyzed a plan growing
-      // with t — the graph_spectral_fiedler failure mode (this query
+      // iteration state is PINNED (Caches.pinned), not lazily
+      // persisted: cur_t chains on cur_{t−1}, so with 2 actions per
+      // step Catalyst re-analyzed a plan growing with t — the
+      // graph_spectral_fiedler failure mode (this query
       // was 10.1 s in the r17 baseline bench with near-zero data).
-      // Superseded checkpoints are freed per step; values unchanged.
-      val shim = org.apache.spark.sql.graftshim.ColumnShim
-      def pin(df: DataFrame): DataFrame = {
-        val cp = df.localCheckpoint()
-        cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
-      }
-      var cur = pin(
+      // Superseded pins are freed per step; values unchanged.
+      var cur = Caches.pinned(
         emb.crossJoin(broadcast(seed.select(col("embedding").as("ce"))))
           .select(col("vec_id"), col("label"), col("embedding"),
             q6d(lit(1.0) - Similarity.cosine(col("embedding"), col("ce")))
@@ -6195,19 +6193,18 @@ object SparkEntry {
         val pickDf = cur.orderBy(col("d6").desc, col("vec_id").asc).limit(1)
         val pr = pickDf.select("vec_id", "label", "d6").head()
         val curPrev = cur
-        cur = pin(
+        cur = Caches.pinned(
           cur.crossJoin(broadcast(pickDf.select(col("embedding").as("ce"))))
             .select(col("vec_id"), col("label"), col("embedding"),
               least(col("d6"),
                 q6d(lit(1.0) -
                   Similarity.cosine(col("embedding"), col("ce"))))
                 .as("d6")))
-        shim.unpersistCheckpoint(curPrev)
+        Caches.unpin(curPrev)
         val (rad, mean) = audit(cur)
         ledger += ((step.toLong, pr.getLong(0), pr.getInt(1),
           Some(pr.getLong(2).toDouble / 1000000.0), rad, mean))
       }
-      shim.unpersistCheckpoint(cur)
       import s.implicits._
       ledger.toSeq
         .toDF("step", "picked_vec_id", "picked_label", "dist_at_pick",
@@ -7682,7 +7679,7 @@ object SparkEntry {
       val h = words0
         .agg(max(length(col("word"))).as("ml"), count(lit(1)).as("n")).head()
       val maxLen = h.getInt(0)
-      val fewWords = h.getLong(1) <= 65536L
+      val fewWords = Caches.singleTask(h.getLong(1))
       val words = if (fewWords) words0.coalesce(1) else words0
       val subs = unigramSubs(words)
       val vlp = unigramSeedVocab(subs)
@@ -7716,7 +7713,7 @@ object SparkEntry {
       val h = words0
         .agg(max(length(col("word"))).as("ml"), count(lit(1)).as("n")).head()
       val maxLen = h.getInt(0)
-      val fewWords = h.getLong(1) <= 65536L
+      val fewWords = Caches.singleTask(h.getLong(1))
       val words = if (fewWords) words0.coalesce(1) else words0
       val subs = graft.Caches.persist(unigramSubs(words))
       val vlp0 = graft.Caches.persist(unigramSeedVocab(subs))
@@ -8303,7 +8300,7 @@ object SparkEntry {
       // CC of the chosen pseudo-forest ON COMPONENT LABELS (a
       // components-sized graph, ext/Graph.connectedComponents — its
       // result is iteration-count-free), per-round carrier frames
-      // localCheckpointed (the graph_mis_luby lineage lesson). Ledger:
+      // pinned (the graph_mis_luby lineage lesson). Ledger:
       // components before/after, forest edges + exact cost added,
       // convergence flag. Scale: per round one edge relabel join, one
       // min_by hash agg, CC on the SHRINKING component graph.
@@ -8312,9 +8309,9 @@ object SparkEntry {
         .select(col("src"), col("dst"),
           floor(lit(1000000.0) / col("w").cast("double") + lit(0.5))
             .cast("long").as("cost6")))
-      var comp = edges.select(col("src").as("node"))
+      var comp = Caches.pinned(edges.select(col("src").as("node"))
         .union(edges.select(col("dst").as("node"))).distinct()
-        .withColumn("comp", col("node")).localCheckpoint()
+        .withColumn("comp", col("node")))
       val ledger = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Long, Long, Long, Long, Boolean)]
       // round r's "before" census IS round r−1's "after" census — one
@@ -8332,12 +8329,12 @@ object SparkEntry {
             col("src"), col("dst"))
           .union(rel.select(col("cb").as("c"), col("cost6"),
             col("src"), col("dst")))
-        val chosen = sym2.groupBy("c")
+        val chosen = Caches.pinned(sym2.groupBy("c")
           .agg(min_by(struct(col("src"), col("dst"), col("cost6")),
             struct(col("cost6"), col("src"), col("dst"))).as("e"))
           .select(col("e.src").as("src"), col("e.dst").as("dst"),
             col("e.cost6").as("cost6"))
-          .distinct().localCheckpoint()
+          .distinct())
         val st = chosen.agg(count(lit(1)).as("n"),
           coalesce(sum("cost6"), lit(0L)).as("w")).head()
         val compEdges = chosen
@@ -8348,9 +8345,11 @@ object SparkEntry {
           .select(col("ca").as("src"), col("cb").as("dst"))
         val cc = Graph.connectedComponents(compEdges)
           .select(col("node").as("comp"), col("component").as("nc"))
-        comp = comp.join(cc, Seq("comp"), "left")
-          .select(col("node"), coalesce(col("nc"), col("comp")).as("comp"))
-          .localCheckpoint()
+        val compPrev = comp
+        comp = Caches.pinned(comp.join(cc, Seq("comp"), "left")
+          .select(col("node"), coalesce(col("nc"), col("comp")).as("comp")))
+        Caches.unpin(compPrev)
+        Caches.unpin(chosen)
         val nAfter = comp.select("comp").distinct().count()
         ledger += ((r.toLong, nBefore, st.getLong(0), st.getLong(1),
           nAfter, nBefore == nAfter))
@@ -8390,10 +8389,9 @@ object SparkEntry {
       // chain, so carrying raw lineage across rounds grows the plan
       // (and its listener-rendered string) EXPONENTIALLY — round 5
       // spent minutes inside generateTreeString before any work. The
-      // ext/Graph CC rule applies: truncate per round with
-      // localCheckpoint (node-sized tables, KBs).
-      var active = und.select(col("src").as("node")).distinct()
-        .localCheckpoint()
+      // ext/Graph CC rule applies: truncate per round with a pin
+      // (node-sized tables, KBs).
+      var active = Caches.pinned(und.select(col("src").as("node")).distinct())
       // thread the active count: round r's "before" IS round r−1's
       // "after" (one count action per round instead of two; identical
       // values by construction)
@@ -8408,17 +8406,17 @@ object SparkEntry {
         val dominated = ae.filter(h(col("dst")) < h(col("src")) ||
             (h(col("dst")) === h(col("src")) && col("dst") < col("src")))
           .select(col("src").as("node")).distinct()
-        val cand = active.join(dominated, Seq("node"), "left_anti")
-          .localCheckpoint()
+        val cand = Caches.pinned(active.join(dominated, Seq("node"), "left_anti"))
         val nbrs = und.join(cand.select(col("node").as("src")), Seq("src"))
           .select(col("dst").as("node")).distinct()
-        val next = active
+        val next = Caches.pinned(active
           .join(cand, Seq("node"), "left_anti")
-          .join(nbrs, Seq("node"), "left_anti")
-          .localCheckpoint()
+          .join(nbrs, Seq("node"), "left_anti"))
         val nAdd = cand.count(); val nAfter = next.count()
         ledger += ((r.toLong, nBefore, nAdd, nBefore - nAfter - nAdd,
           nAfter, nAfter == 0L))
+        Caches.unpin(cand)
+        Caches.unpin(active)
         active = next
         nBefore = nAfter
       }
@@ -8468,8 +8466,8 @@ object SparkEntry {
         when(Dedup.md5Hash60(col("src").cast("string"))
           .bitwiseAND(lit(1L)) === 1L, 1000000L).otherwise(-1000000L)
           .as("x6")))
-      // Iteration state is PINNED (eager localCheckpoint + lineage-free
-      // wrapper — the louvainFullRun pin), not lazily persisted: a
+      // Iteration state is PINNED (Caches.pinned — the louvainFullRun
+      // pin), not lazily persisted: a
       // persisted frame still carries its whole logical lineage, so
       // with 3 actions per iteration Catalyst re-analyzed a plan that
       // grew superlinearly with t — measured 17.6-53.8 s/rep at sf0.1
@@ -8479,13 +8477,7 @@ object SparkEntry {
       // constant depth; superseded checkpoints are freed in-loop (the
       // CC hygiene). Values are unchanged: same joins, same pinned
       // arithmetic, same driver scalars.
-      val shim = org.apache.spark.sql.graftshim.ColumnShim
-      def pin(df: DataFrame): DataFrame = {
-        val cp = df.localCheckpoint()
-        cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
-      }
       var x = nodes.select("node", "x6")
-      var xPrev: DataFrame = null // pinned predecessor, freed per round
       // deflation dot-product AND sign census in ONE nodes⋈x aggregate
       // (r18, guide §1.2): the census of iteration t and the deflation
       // of iteration t+1 both scan the same pinned x — they were two
@@ -8504,7 +8496,7 @@ object SparkEntry {
         .empty[(Long, Double, Double, Long, Long)]
       for (t <- 1 to 4) {
         val c = c12.toDouble / 1.0e12
-        val xd = pin(nodes.select("node", "v16")
+        val xd = Caches.pinned(nodes.select("node", "v16")
           .join(x, Seq("node"))
           .select(col("node"),
             (col("x6") - floor(lit(c) * col("v16").cast("double") +
@@ -8514,7 +8506,7 @@ object SparkEntry {
             Seq("dst"))
           .groupBy(col("src").as("node"))
           .agg(sum(col("xj") * col("w6")).as("y12"))
-        val y6t = pin(y.select(col("node"),
+        val y6t = Caches.pinned(y.select(col("node"),
           floor(col("y12").cast("double") / lit(1000000.0) + lit(0.5))
             .cast("long").as("y6")))
         val r = xd.join(y6t, Seq("node"))
@@ -8523,21 +8515,19 @@ object SparkEntry {
             sum(col("y6") * col("y6")).as("nsq")).head()
         val rayleigh = r.getLong(0).toDouble / r.getLong(1).toDouble
         val nrm = math.sqrt(r.getLong(2).toDouble) / 1.0e6
-        val xNew = pin(y6t.select(col("node"),
+        val xNew = Caches.pinned(y6t.select(col("node"),
           floor(col("y6").cast("double") / lit(nrm) + lit(0.5))
             .cast("long").as("x6")))
         val (c12next, np, nn) = xStats(xNew)
         c12 = c12next
-        // xd / y6t / the superseded x are dead once xNew and the scalars
-        // exist — free their checkpoint blocks now, not at session end
-        shim.unpersistCheckpoint(xd)
-        shim.unpersistCheckpoint(y6t)
-        if (xPrev != null) shim.unpersistCheckpoint(xPrev)
-        xPrev = xNew
+        // xd / y6t / the superseded x (a pin after round 1) are dead once
+        // xNew and the scalars exist — free their blocks now
+        Caches.unpin(xd)
+        Caches.unpin(y6t)
+        if (t > 1) Caches.unpin(x)
         x = xNew
         ledger += ((t.toLong, c, rayleigh, np, nn))
       }
-      if (xPrev != null) shim.unpersistCheckpoint(xPrev)
       import s.implicits._
       ledger.toSeq
         .toDF("iter", "deflate_c", "rayleigh_lambda2", "n_pos", "n_neg")

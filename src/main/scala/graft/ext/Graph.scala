@@ -24,7 +24,7 @@ object Graph {
 
   /** Connected components of an undirected edge list.
     *
-    * Iteration state is `localCheckpoint`-ed (eager), not merely
+    * Iteration state is pinned ([[graft.Caches.pinned]]), not merely
     * persisted: a persisted DataFrame still CARRIES its whole logical
     * lineage, so after n rounds Catalyst would re-analyze a plan that
     * grew with every iteration — measured as ~68 s of pure planning at
@@ -32,10 +32,11 @@ object Graph {
     * what GraphX's Pregel loop does with materialize+unpersist) keeps
     * per-round cost flat.
     *
-    * Block hygiene (r3 ADVICE): each superstep's localCheckpoint persists
-    * one RDD; the superseded labels RDD is unpersisted as soon as the
-    * next round's state is materialized (GraphX Pregel's own
+    * Block hygiene (r3 ADVICE): each superstep pins one RDD; the
+    * superseded labels pin is freed ([[graft.Caches.unpin]]) as soon as
+    * the next round's state is materialized (GraphX Pregel's own
     * materialize+unpersist pattern), so storage stays O(1) in rounds.
+    * The returned labels read the last pin (query-scoped).
     * Non-convergence within `maxIter` fails fast instead of silently
     * returning partially-propagated labels.
     *
@@ -55,8 +56,8 @@ object Graph {
       canonicalEdges: Boolean = false): DataFrame = {
     val symRaw = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-    val sym0 = (if (canonicalEdges) symRaw else symRaw.distinct())
-      .localCheckpoint(true)
+    val sym0 = graft.Caches.pinned(
+      if (canonicalEdges) symRaw else symRaw.distinct())
     // measured single-task mode (r18, guide §2.2): most CC consumers
     // feed component-bounded graphs (dedup clusters, Borůvka
     // contraction graphs, phash pairs) where every superstep's joins
@@ -66,12 +67,11 @@ object Graph {
     // to one partition (SinglePartition satisfies every clustered
     // distribution, so rounds run exchange-free); bigger graphs keep
     // the distributed shape. The count reads just-checkpointed blocks.
-    val one = sym0.count() <= 262144L
+    val one = graft.Caches.singleTask(sym0.count())
     val sym = if (one) sym0.coalesce(1) else sym0
     def narrow(df: DataFrame): DataFrame = if (one) df.coalesce(1) else df
-    var labels = narrow(sym.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node")))
-      .localCheckpoint(true)
+    var labels = graft.Caches.pinned(narrow(sym.select(col("src").as("node"))
+      .distinct().withColumn("label", col("node"))))
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIter) {
@@ -92,26 +92,25 @@ object Graph {
       // shuffle join back to the old labels (guide §2.4: one exchange per
       // round removed; same count by construction — `next` has exactly
       // one row per labels row)
-      val next = narrow(labels
+      val next = graft.Caches.pinned(narrow(labels
         .join(lbl2, Seq("label"), "left")
         .join(nbrMin, Seq("node"), "left")
         .select(col("node"),
           least(col("label"),
             coalesce(col("jump"), col("label")),
             coalesce(col("nbr_min"), col("label"))).as("label"),
-          col("label").as("prev")))
-        .localCheckpoint(true)
+          col("label").as("prev"))))
       changed = next.filter(col("label") =!= col("prev")).count()
       // prev state is dead once `next` (already eagerly materialized) and
       // the change count no longer read it — free its checkpoint blocks
-      org.apache.spark.sql.graftshim.ColumnShim.unpersistCheckpoint(labels)
+      graft.Caches.unpin(labels)
       labels = next
       iter += 1
     }
     require(changed == 0,
       s"connectedComponents did not converge in $maxIter rounds " +
         "(labels still changing) — raise maxIter; returning partial labels would be silently wrong")
-    org.apache.spark.sql.graftshim.ColumnShim.unpersistCheckpoint(sym)
+    graft.Caches.unpin(sym0)
     labels.select(col("node"), col("label").as("component"))
   }
 
@@ -133,28 +132,25 @@ object Graph {
     * Scale shape per round: two min-aggregates + two joins on node ids
     * (no labels table to carry), edge count monotically non-increasing
     * after the first rounds; O(log² n) worst-case rounds, ~2-4 in
-    * practice on dedup graphs. Same localCheckpoint lineage truncation
-    * and O(1) block storage as the Pregel loop. Nodes whose edges are
-    * only self-loops keep themselves (seeded from the input node set).
+    * practice on dedup graphs. Same pins and O(1) block storage as the
+    * Pregel loop. Nodes whose edges are only self-loops keep themselves
+    * (seeded from the input node set).
     */
   def connectedComponentsStars(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    val shim = org.apache.spark.sql.graftshim.ColumnShim
-    val nodes = edges.select(col("src").as("node"))
+    val nodes = graft.Caches.pinned(edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     // start from larger→smaller directed pairs; self-loops drop (they
     // carry no connectivity) and re-enter via the node seed at the end
-    val e0 = edges
+    val e0 = graft.Caches.pinned(edges
       .select(greatest(col("src"), col("dst")).as("u"),
         least(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     // measured single-task mode — the [[connectedComponents]] argument:
     // star rounds over KB-scale pair graphs paid 32 tasks of fixed cost
     // per join/aggregate for no parallelism gain
-    val one = e0.count() <= 262144L
+    val one = graft.Caches.singleTask(e0.count())
     def narrow(df: DataFrame): DataFrame = if (one) df.coalesce(1) else df
     var e = if (one) e0.coalesce(1) else e0
     var stable = false
@@ -171,12 +167,11 @@ object Graph {
       // small-star over the (now all larger→smaller) edges
       val ssMin = ls.groupBy("u").agg(min("v").as("m"))
       val joined = ls.join(ssMin, Seq("u"))
-      val next = narrow(joined.filter(col("v") =!= col("m"))
+      val next = graft.Caches.pinned(narrow(joined.filter(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
         .union(ssMin.select(col("u"), col("m").as("v")))
         .filter(col("u") =!= col("v"))
-        .distinct())
-        .localCheckpoint(true)
+        .distinct()))
       // exact fixed-point check: symmetric difference must be empty.
       // ONE full-outer join + aggregate gives both directions in a
       // single action (was two anti-join counts = two jobs + two
@@ -188,14 +183,15 @@ object Graph {
           coalesce(sum(when(col("in_next").isNull, 1L).otherwise(0L)), lit(0L)))
         .head()
       stable = diff.getLong(0) == 0L && diff.getLong(1) == 0L
-      shim.unpersistCheckpoint(e)
+      // the first `e` is the coalesced e0 (no checkpoint of its own)
+      graft.Caches.unpin(if (iter == 0) e0 else e)
       e = next
       iter += 1
     }
     require(stable,
       s"connectedComponentsStars did not reach a fixed point in $maxIter rounds")
-    // nodes/e stay persisted: the returned (lazy) labels plan reads both;
-    // callers drop the blocks with the session or via unpersistCheckpoint
+    // nodes/e stay pinned: the returned (lazy) labels plan reads both;
+    // the query's clearPersisted frees them
     nodes
       .join(e.select(col("u").as("node"), col("v").as("component")), Seq("node"), "left")
       .select(col("node"), coalesce(col("component"), col("node")).as("component"))
@@ -601,14 +597,14 @@ object Graph {
     * makes full Louvain tractable; Blondel §2). Per level: one move
     * round (hash aggs, ∝ current E), one condense (one shuffle), and
     * three S4 scalar aggregates. Each level's condensed graph is
-    * localCheckpointed AND rebuilt from its checkpointed RDD
-    * (createDataFrame) — the checkpoint truncates lineage, but it
-    * PRESERVES the optimizer's sizeInBytes estimate, and join-stat
+    * pinned ([[graft.Caches.pinned]]), which serves the checkpoint as a
+    * fresh leaf — the checkpoint truncates lineage, but it PRESERVES
+    * the optimizer's sizeInBytes estimate, and join-stat
     * estimates are PRODUCTS of child sizes, so across k levels the
     * estimate compounds as size^(4^k): by level ~10 Catalyst was
     * multiplying million-digit BigIntegers inside
     * SizeInBytesOnlyStatsPlanVisitor (measured: 17 min of driver CPU
-    * in BigInteger.multiplyToomCook3). The RDD rebuild resets each
+    * in BigInteger.multiplyToomCook3). The fresh leaf resets each
     * level to default leaf stats — constant per level, no compounding
     * (AQE re-plans with real sizes at runtime, so nothing is lost).
     */
@@ -622,18 +618,14 @@ object Graph {
     * level whose sc strictly rose (Blondel returns the partition
     * before the non-improving move; under the cap with Q still
     * rising, the cap level). The composition is one node-sized join
-    * per level, pinned like the condensed graphs.
+    * per level, pinned like the condensed graphs; a caller that keeps
+    * the labels past the query checkpoints them.
     */
   def louvainFullRun(edges: DataFrame,
       maxLevels: Int = 10): (DataFrame, DataFrame) = {
     require(maxLevels >= 1 && maxLevels <= 12, "maxLevels in [1,12]")
     val spark = edges.sparkSession
     import spark.implicits._
-    // materialize + truncate lineage AND stats (see scaladoc)
-    def pin(df: DataFrame): DataFrame = {
-      val cp = df.localCheckpoint()
-      cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
-    }
     val wtot = edges.agg(sum("w")).head().getLong(0)
     require(wtot > 0L, "louvainFull needs a non-empty weighted edge set")
     // (n_communities, intra_w, Σ S_c² as exact decimal) of a super-graph —
@@ -677,7 +669,7 @@ object Graph {
     val (nc0, intra0, ssq0) = telemetry(e)
     rows += ((0L, nc0, 0L, intra0, q6(intra0, ssq0)))
     // composed node → community map, and the best (argmax-Q) snapshot
-    var comp = pin(edges.select(col("src").as("node"))
+    var comp = graft.Caches.pinned(edges.select(col("src").as("node"))
       .unionAll(edges.select(col("dst").as("node"))).distinct()
       .select(col("node"), col("node").as("community")))
     var best = comp
@@ -685,10 +677,10 @@ object Graph {
     var level = 1
     var rising = true
     while (rising && level <= maxLevels) {
-      val lab = pin(louvainMoveLabelsWithSelfLoops(e, swapFree = true))
+      val lab = graft.Caches.pinned(louvainMoveLabelsWithSelfLoops(e, swapFree = true))
       val moved = lab.filter(col("node") =!= col("label")).count()
-      e = pin(louvainCondense(e, lab))
-      comp = pin(comp
+      e = graft.Caches.pinned(louvainCondense(e, lab))
+      comp = graft.Caches.pinned(comp
         .join(lab.select(col("node").as("community"), col("label")),
           Seq("community"))
         .select(col("node"), col("label").as("community")))

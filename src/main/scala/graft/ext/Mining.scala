@@ -33,10 +33,13 @@ object Mining {
     * basket self-joins — the r17 form exchanged the basket table twice
     * and re-ran the pair self-join per consumer branch (the 15.7 s
     * task-time stage in the r18 StageProfile of orders_basket_rules).
-    * `prePairSup` lets a caller donate an already-built (p1, p2, sup2)
-    * table — the shared co-purchase memo counts exactly these pairs.
     * Identical rows by construction: a sorted set's (i < j) positions
     * enumerate exactly the a.p < c.p distinct pairs.
+    *
+    * @param prePairSup a donated (p1, p2, sup2) table (the co-purchase
+    *   memo's). Unchecked contract: one row per distinct pair p1 < p2,
+    *   sup2 = how many baskets of exactly THIS `baskets` input hold both
+    *   (once per basket); anything else silently changes the output.
     */
   def frequentTriples(baskets: DataFrame, minsup: Long,
       prePairSup: Option[DataFrame] = None): DataFrame = {
@@ -88,6 +91,7 @@ object Mining {
     * arithmetic over the already-bounded frequent tables.
     * Output: (antecedent "a" | "a,b" canonical, consequent, support,
     * confidence, lift), ordered (antecedent, consequent).
+    * `prePairSup` carries the [[frequentTriples]] contract.
     */
   def associationRules(baskets: DataFrame, minsupPair: Long,
       minsupTriple: Long, prePairSup: Option[DataFrame] = None): DataFrame = {

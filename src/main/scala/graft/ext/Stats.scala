@@ -73,7 +73,7 @@ object Stats {
     // single-task on the cached blocks; larger domains keep full
     // fan-out. Exact integer arithmetic — values unchanged either way.
     val n = perP.count()
-    val per = if (n <= 262144L) perP.coalesce(1) else perP
+    val per = if (graft.Caches.singleTask(n)) perP.coalesce(1) else perP
     val cum = PrefixSum.scan(per, "v", Seq("c"), bucketSize)
     val tot = per.agg(sum("c").as("n"))
     val qs = quantiles.toDF("p", "num", "den")
@@ -111,7 +111,7 @@ object Stats {
       values.groupBy(col("g"), col("v")).agg(count(lit(1)).as("c")))
     // measured single-task decision — see exactQuantilesFromCounts
     val n = perP.count()
-    val per = if (n <= 262144L) perP.coalesce(1) else perP
+    val per = if (graft.Caches.singleTask(n)) perP.coalesce(1) else perP
     val cum = PrefixSum.scanBy(per, Seq("g"), "v", Seq("c"), bucketSize)
     val tot = per.groupBy("g").agg(sum("c").as("n"))
     val qs = quantiles.toDF("p", "num", "den")
@@ -139,7 +139,7 @@ object Stats {
         sum(when(col("grp"), 0L).otherwise(1L)).as("cb")))
     // measured single-task decision — see exactQuantilesFromCounts
     val nk = perP.count()
-    val per = if (nk <= 262144L) perP.coalesce(1) else perP
+    val per = if (graft.Caches.singleTask(nk)) perP.coalesce(1) else perP
     val cum = PrefixSum.scan(per, "v", Seq("ca", "cb"), bucketSize)
     val tot = per.agg(sum("ca").as("na"), sum("cb").as("nb"))
     // |F_a(v) − F_b(v)| from exact integer ratios — deterministic
@@ -187,7 +187,7 @@ object Stats {
         sum(when(col("arm") === 1, 1L).otherwise(0L)).as("c1")))
     // measured single-task decision — see exactQuantilesFromCounts
     val nk = perP.count()
-    val per = if (nk <= 262144L) perP.coalesce(1) else perP
+    val per = if (graft.Caches.singleTask(nk)) perP.coalesce(1) else perP
     val cum = PrefixSum.scan(per, "v", Seq("c0"), bucketSize)
     // cum_c0 is inclusive; strictly-below control count = cum_c0 − c0;
     // 2·U₁ = Σ_v c1·(2·below + c0) keeps the tie half-credit integral

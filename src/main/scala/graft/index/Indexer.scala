@@ -248,7 +248,7 @@ object Indexer {
     */
   def loadArtifacts(spark: SparkSession, dir: String): IndexTables = {
     def r(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
-    def pin(df: DataFrame): DataFrame = {
+    def hold(df: DataFrame): DataFrame = {
       df.unpersist(false)
       val p = graft.Caches.persist(df)
       p.count()
@@ -259,12 +259,12 @@ object Indexer {
     val idf = r("idf_values")
     val parts = math.max(1L,
       (tf.count() + PinnedPostingsPerPartition - 1) / PinnedPostingsPerPartition).toInt
-    val pinned = pin(postings(tf, idf, dl)
+    val pinned = hold(postings(tf, idf, dl)
       .repartitionByRange(parts, col("word"), col("doc_id"))
       .sortWithinPartitions("word", "doc_id"))
     val textPath = new org.apache.hadoop.fs.Path(s"$dir/opinion_text.parquet")
     if (textPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(textPath))
-      pin(r("opinion_text"))
+      hold(r("opinion_text"))
     IndexTables(
       flatWords = r("flat_words"),
       docLengths = dl,

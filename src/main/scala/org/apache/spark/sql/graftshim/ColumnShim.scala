@@ -52,21 +52,14 @@ object ColumnShim {
     }
   }
 
-  /** Release the block-manager storage behind a `localCheckpoint`ed
-    * DataFrame: its analyzed plan is a `LogicalRDD` over the persisted
-    * checkpoint RDD, which `Dataset.unpersist` cannot reach (the dataset
-    * is not catalog-cached). No-op for any other plan shape; never
-    * throws (a stopped context makes this best-effort cleanup moot).
-    * Needed by iterative algorithms ([[graft.ext.Graph]]) that would
-    * otherwise leak one persisted RDD per superstep.
+  /** A frame over `l`'s rdd under fresh attribute ids, with no origin
+    * statistics or constraints (it plans as a default-sized leaf); the
+    * rdd's declared partitioning and ordering are kept.
     */
-  def unpersistCheckpoint(df: DataFrame): Unit =
-    try {
-      logicalPlan(df) match {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-        case _ => ()
-      }
-    } catch { case _: Throwable => () }
+  def freshLeaf(spark: SparkSession,
+      l: org.apache.spark.sql.execution.LogicalRDD): DataFrame =
+    ofRows(spark, l.newInstance()
+      .copy()(spark.asInstanceOf[classic.SparkSession], None, None))
 
   /** Idempotently add a planner strategy to a LIVE session (the
     * runtime-registration face of `injectPlannerStrategy`, for sessions

@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.storage.StorageLevel
 
 /** [[Caches]] releases everything it pins: `clearPersisted` frees the
-  * checkpoint behind a [[Caches.pinned]] frame, and a frame whose plan
-  * holds no checkpoint rdd is tracked through [[Caches.persist]] instead
-  * of being skipped.
+  * checkpoint behind a [[Caches.pinned]] frame, [[Caches.unpin]] frees
+  * one at once, and a frame whose plan holds no checkpoint rdd is
+  * tracked through [[Caches.persist]] instead of being skipped.
   */
 class CachesSpec extends SparkSpec {
 
@@ -27,5 +27,16 @@ class CachesSpec extends SparkSpec {
     assert(f.count() == 5)
     Caches.clearPersisted()
     assert(f.storageLevel == StorageLevel.NONE)
+  }
+
+  test("unpin frees a pinned frame's blocks at once") {
+    val before = persistentIds
+    val p = Caches.pinned(spark.range(100).toDF("id"))
+    val pinnedIds = persistentIds -- before
+    assert(pinnedIds.nonEmpty)
+    // the served frame reads the checkpoint's own blocks
+    assert(p.count() == 100)
+    Caches.unpin(p)
+    assert((persistentIds intersect pinnedIds).isEmpty)
   }
 }

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * session gets its own entry instead of silently evicting (and leaking
   * the checkpoint blocks of) the first session's, and each session's
   * entry keeps being served to it afterward; [[SessionMemo.resetAll]]
-  * releases every memo, whatever it holds.
+  * releases every memo, whatever it holds; a memo value never reads a
+  * query-scoped pin.
   */
 class SessionMemoSpec extends AnyFunSuite with SparkSpec {
 
@@ -103,6 +104,28 @@ class SessionMemoSpec extends AnyFunSuite with SparkSpec {
     SessionMemo.resetAll()
     assert(hits() == Set(7L, 8L, 9L))
     SessionMemo.resetAll()
+  }
+
+  test("memo values outlive the query's pins; resetAll frees them all") {
+    val dir = "/root/testdata/sf0.001"
+    val memoQueries = Seq("dedup_components", "graph_louvain_full_sizes")
+    def ids = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def rows(q: String) =
+      SparkEntry.queries(q)(spark, dir).collect().map(_.toString).sorted.toSeq
+    SessionMemo.resetAll()
+    Caches.clearPersisted()
+    val before = ids
+    val first = memoQueries.map(rows)
+    Caches.clearPersisted()
+    // served from the memos (CC labels, both louvain faces): a value
+    // that read a query-scoped pin fails with "Checkpoint block ... not
+    // found" here
+    assert(memoQueries.map(rows) == first)
+    Caches.clearPersisted()
+    val memoIds = ids -- before
+    assert(memoIds.nonEmpty)
+    SessionMemo.resetAll()
+    assert((ids intersect memoIds).isEmpty, s"resetAll left ${ids intersect memoIds}")
   }
 
   test("ShingledRows tag mismatch fails loudly (r6 ADVICE)") {

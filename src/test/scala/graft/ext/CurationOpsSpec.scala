@@ -10,6 +10,20 @@ class CurationOpsSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
+  /** Run `q` again after a clear: every block it pins is query-scoped,
+    * so nothing may outlive the second clear (the first run built the
+    * session memos it reads).
+    */
+  private def leavesNoBlocks(q: String): Unit = {
+    def persistentIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    graft.Caches.clearPersisted()
+    val snapshot = persistentIds
+    SparkEntry.queries(q)(spark, dir).collect()
+    graft.Caches.clearPersisted()
+    val added = persistentIds -- snapshot
+    assert(added.isEmpty, s"$q left persistent RDDs $added")
+  }
+
   test("curate_prototype_prune: keeps ceil(n/2) hardest, kept ≥ cut ≥ pruned") {
     val rows = SparkEntry.queries("curate_prototype_prune")(spark, dir).collect()
     assert(rows.nonEmpty && rows.length <= 8)
@@ -183,6 +197,7 @@ class CurationOpsSpec extends SparkSpec {
       assert(math.abs(n.getDouble(3) - p.getDouble(4)) < 1e-9,
         s"step ${n.getLong(0)}: pick dist ${n.getDouble(3)} != prev radius ${p.getDouble(4)}")
     }
+    leavesNoBlocks("curate_kcenter_coreset")
   }
 
   test("ml_knn_shapley: bounded values, distinct points, deterministic") {
@@ -273,6 +288,7 @@ class CurationOpsSpec extends SparkSpec {
       assert(n.getLong(1) == p.getLong(4),
         "next round must start from the previous components")
     }
+    leavesNoBlocks("graph_mst_boruvka")
   }
 
   test("graph_mis_luby: ledger balances, actives shrink, convergence absorbs") {
@@ -293,6 +309,7 @@ class CurationOpsSpec extends SparkSpec {
         "next round must start from the previous actives")
       if (p.getBoolean(5)) assert(n.getBoolean(5), "convergence must absorb")
     }
+    leavesNoBlocks("graph_mis_luby")
   }
 
   test("graph_spectral_fiedler: deflation absorbs, spectrum bounds hold") {
@@ -311,6 +328,7 @@ class CurationOpsSpec extends SparkSpec {
     // both sides of the bisection are nonempty (a sign-collapsed
     // vector would mean the iteration degenerated)
     rows.foreach(r => assert(r.getLong(3) > 0 && r.getLong(4) > 0))
+    leavesNoBlocks("graph_spectral_fiedler")
   }
 
   test("graph_ktruss: peeling is monotone and convergence is absorbing") {

@@ -42,10 +42,16 @@ class GraphSpec extends SparkSpec {
     val random = (1 to 400).map(_ => (rnd.nextInt(300).toLong + 1000L,
       rnd.nextInt(300).toLong + 1000L))
     val edges = (chain ++ star ++ clique ++ loops ++ random).toDF("src", "dst")
+    // every block either function pins is query-scoped: none outlives
+    // the clear (a coalesced or re-wrapped checkpoint used to stay)
+    def persistentIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persistentIds
     val a = Graph.connectedComponents(edges).as[(Long, Long)].collect().toMap
     graft.Caches.clearPersisted()
+    assert((persistentIds -- before).isEmpty, "connectedComponents left blocks")
     val b = Graph.connectedComponentsStars(edges).as[(Long, Long)].collect().toMap
     graft.Caches.clearPersisted()
+    assert((persistentIds -- before).isEmpty, "connectedComponentsStars left blocks")
     assert(a == b)
     assert(b(40L) == 1L && b(120L) == 100L && b(500L) == 500L && b(601L) == 600L)
   }

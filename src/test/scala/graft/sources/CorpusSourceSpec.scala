@@ -1,11 +1,11 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import graft.text.Tokenizer
 
 class CorpusSourceSpec extends SparkSpec {
 
-  private val fixture = "/root/repo/src/main/resources/cap_fixture.jsonl"
+  private val fixture = SparkEntry.FixturePath
   private lazy val corpus = CorpusSource.readJsonl(spark, fixture)
 
   test("explicit schema reads all six fixture cases") {
