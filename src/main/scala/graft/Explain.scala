@@ -9,7 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = GraftSession.local(GraftSession.coresFromEnv(default = 8))
+    val spark = GraftSession.local(GraftSession.coresFromEnv())
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n===================== $n =====================")

@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Canonical SparkSession factory for the graft engine.
   *
-  * Every harness main (Bench / Verify / TimeQueries / ScaleBench) and any
-  * embedding application needs the same session settings; before this
+  * Every harness main (Bench / Verify / TimeQueries / ScaleBench /
+  * Explain / Smoke) and any embedding application needs the same session
+  * settings, and the same core count ([[coresFromEnv]]); before this
   * factory each main hand-rolled its own copy and they drifted (one had
   * the UTC timezone, another didn't; the codegen-cache fix had to be
   * applied in four places). The settings and why they are not defaults:
@@ -50,7 +51,7 @@ object GraftSession {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     // NOT set: spark.sql.join.preferSortMergeJoin=false (guide §3.1/§9)
     // was TRIED in r17 and reverted — a 12-query A/B at sf0.1 plus a
-    // StageProfile of the heaviest join chain (graph_triangles' wedge
+    // stage breakdown of the heaviest join chain (graph_triangles' wedge
     // join, ~150 MiB of neighbor arrays through one exchange) showed
     // identical shuffle bytes and no wall-clock change: the planner's
     // SHJ size conditions never fire on these plans, so the flag only
@@ -70,9 +71,9 @@ object GraftSession {
     spark
   }
 
-  /** Cores from the harness convention (`SPARK_GRAFT_CPUS`), defaulting
-    * to all visible processors.
+  /** Cores from the harness convention (`SPARK_GRAFT_CPUS`), else all
+    * visible processors.
     */
-  def coresFromEnv(default: Int = Runtime.getRuntime.availableProcessors): Int =
-    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(default)
+  def coresFromEnv(): Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
 }

@@ -641,66 +641,27 @@ object ScaleBench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val scratch = s"${SparkEntry.WorkDir}/scale"
-    val spark = GraftSession.local(GraftSession.coresFromEnv(default = 32))
+    val spark = GraftSession.local(GraftSession.coresFromEnv())
 
     println(s"[scale] synthesizing 1x and ${factor}x from $base …")
     synth(spark, base, s"$scratch/x1", 1)
     synth(spark, base, s"$scratch/x$factor", factor)
 
-    // JIT/codegen warmup on the small real sf (same rationale as Bench)
-    selected.foreach { q =>
-      try queryFor(q)(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => () }
-      Caches.clearPersisted()
-    }
+    // JIT/codegen warmup on the small real sf (same pass as Bench)
+    Bench.warmup(spark, selected.map(q => q -> queryFor(q)))
 
-    def time(q: String, dir: String): Double =
-      BenchUtil.medianTimeSec(reps, after = () => {
+    def time(q: String, dir: String): Either[Throwable, Double] =
+      Bench.timeReps(reps, () => { queryFor(q)(spark, dir).count(); () }, () => {
         Caches.clearPersisted()
         // reps must pay the real cost: memo builds, the built index and
         // the tbl listings
         SessionMemo.resetAll()
-      })(() => queryFor(q)(spark, dir).count())
+      }).map(Bench.median)
 
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(SparkEntry.ReceiptsDir))
-    val rows = selected.map { q =>
-      val t1 = time(q, s"$scratch/x1")
-      val tf = time(q, s"$scratch/x$factor")
-      println(f"[scale] $q%-28s 1x=$t1%7.2fs  ${factor}x=$tf%7.2fs  ratio=${tf / t1}%5.2f")
-      // append the row IMMEDIATELY (r15: the first r15 run died on a
-      // mid-list query and the four rows already timed were lost —
-      // end-of-run persistence protects against SIGPIPE but not
-      // against a crash mid-sweep)
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"${SparkEntry.ReceiptsDir}/scale_curve.jsonl"),
-        s"""{"metric":"scale_curve_row","factor":$factor,"reps":$reps,"query":"$q","t1":$t1,"t$factor":$tf,"ratio":${tf / t1}}""" + "\n",
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-      catch { case e: Throwable =>
-        System.err.println(s"scale_curve.jsonl append failed: $e")
-      }
-      (q, t1, tf, tf / t1)
-    }
-    val qs = rows.map { case (q, t1, tf, r) =>
-      s"""\"$q\":{\"t1\":$t1,\"t$factor\":$tf,\"ratio\":$r}"""
-    }.mkString("{", ",", "}")
-    val json = s"""{"metric":"scale_curve","factor":$factor,"reps":$reps,"queries":$qs}"""
-    println(json)
-    // also persist: console output is one SIGPIPE away from lost —
-    // an r14 run's results vanished into a dead grep pipe and the
-    // whole synthesis + timing had to be re-paid. APPEND to a JSONL
-    // ledger (r14 ADVICE: the fixed-path overwrite meant successive
-    // runs at different factors/query sets erased each other) and keep
-    // the fixed-path file as the latest-run snapshot.
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"${SparkEntry.ReceiptsDir}/scale_curve.json"), json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"${SparkEntry.ReceiptsDir}/scale_curve.jsonl"),
-      json + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-
+    // append each row IMMEDIATELY (r15: the first r15 run died on a
+    // mid-list query and the four rows already timed were lost —
+    // end-of-run persistence protects against SIGPIPE but not against a
+    // crash mid-sweep)
     def appendRow(row: String): Unit = {
       println(row)
       try java.nio.file.Files.writeString(
@@ -712,6 +673,41 @@ object ScaleBench {
         System.err.println(s"scale_curve.jsonl append failed: $e")
       }
     }
+
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(SparkEntry.ReceiptsDir))
+    // a query that throws gets a failed row, the sweep goes on, and the
+    // run exits 1 at the end
+    val outcomes = selected.map { q =>
+      val outcome = for {
+        t1 <- time(q, s"$scratch/x1")
+        tf <- time(q, s"$scratch/x$factor")
+      } yield (t1, tf)
+      outcome match {
+        case Right((t1, tf)) =>
+          println(f"[scale] $q%-28s 1x=$t1%7.2fs  ${factor}x=$tf%7.2fs  ratio=${tf / t1}%5.2f")
+          appendRow(s"""{"metric":"scale_curve_row","factor":$factor,"reps":$reps,"query":"$q","status":"ok","t1":$t1,"t$factor":$tf,"ratio":${tf / t1}}""")
+        case Left(e) =>
+          println(f"[scale] $q%-28s FAILED ${e.getClass.getName}: ${e.getMessage}")
+          appendRow(s"""{"metric":"scale_curve_row","factor":$factor,"reps":$reps,"query":"$q","status":"failed","error":"${e.getClass.getName}"}""")
+      }
+      q -> outcome
+    }
+    val failed = outcomes.collect { case (q, Left(_)) => q }
+    val qs = outcomes.collect { case (q, Right((t1, tf))) =>
+      s"""\"$q\":{\"t1\":$t1,\"t$factor\":$tf,\"ratio\":${tf / t1}}"""
+    }.mkString("{", ",", "}")
+    val json = s"""{"metric":"scale_curve","factor":$factor,"reps":$reps,"queries":$qs}"""
+    // also persist: console output is one SIGPIPE away from lost —
+    // an r14 run's results vanished into a dead grep pipe and the
+    // whole synthesis + timing had to be re-paid. APPEND to a JSONL
+    // ledger (r14 ADVICE: the fixed-path overwrite meant successive
+    // runs at different factors/query sets erased each other) and keep
+    // the fixed-path file as the latest-run snapshot.
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"${SparkEntry.ReceiptsDir}/scale_curve.json"), json)
+    appendRow(json)
+
     val dirs = Seq((1, s"$scratch/x1"), (factor, s"$scratch/x$factor"))
 
     // r18 VERDICT #5 receipt: the dedup_components @10× ratio is
@@ -761,5 +757,9 @@ object ScaleBench {
       }
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[scale] failed queries: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(GraftSession.coresFromEnv(default = 8))
+    val spark = GraftSession.local(GraftSession.coresFromEnv())
     val df =
       if (args.nonEmpty)
         search.Search.topKWithSnippet(

@@ -21,7 +21,7 @@ object Verify {
     val selectedOracles =
       if (only.isEmpty) SparkEntry.oracleSql
       else SparkEntry.oracleSql.view.filterKeys(only).toMap
-    val spark = GraftSession.local(GraftSession.coresFromEnv(default = 4))
+    val spark = GraftSession.local(GraftSession.coresFromEnv())
     val failed = dump(spark, sfDir, outDir, selected)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

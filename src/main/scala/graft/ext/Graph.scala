@@ -862,9 +862,10 @@ object Graph {
     * are harmless. Per round the work is two node-id semi-joins + one
     * hash aggregate — all shuffles on node ids, nothing quadratic, and
     * the survivor set only shrinks, so round cost is monotonically
-    * non-increasing. Survivor frames are persisted via [[graft.Caches]]
-    * (each is referenced by two semi-join branches of the next round —
-    * unpersisted, the lazy chain would re-execute ~2^rounds times).
+    * non-increasing. Each round's survivors are pinned
+    * ([[graft.Caches.pinned]]) and the superseded pin freed: the next
+    * round reads them in two semi-join branches, so a lazy persist
+    * kept the whole lineage in the plan, which doubled every round.
     *
     * @param edges (src, dst); direction ignored, self-loops dropped
     * @param k minimum degree to survive a peel round
@@ -886,12 +887,14 @@ object Graph {
       .groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
     // round 1 closed-form: everyone is alive, so the peel is just the
     // full-graph degree filter
-    var alive = graft.Caches.persist(
+    var alive = graft.Caches.pinned(
       sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select("node"))
     (2 to rounds).foreach { _ =>
-      alive = graft.Caches.persist(
+      val next = graft.Caches.pinned(
         inducedDeg(alive).filter(col("deg") >= k).select("node"))
+      graft.Caches.unpin(alive)
+      alive = next
     }
     inducedDeg(alive)
   }

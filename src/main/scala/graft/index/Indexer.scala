@@ -117,15 +117,24 @@ object Indexer {
   /** All index artifacts for a corpus, with the flat-words lineage persisted
     * once (the §3.2 fix). `docs` must have columns (doc_id, text).
     */
-  def build(docs: DataFrame, stem: Boolean = true): IndexTables = {
-    val flat = flatWords(docs, stem).persist(StorageLevel.MEMORY_AND_DISK)
+  def build(docs: DataFrame, stem: Boolean = true): IndexTables =
+    assemble(flatWords(docs, stem).persist(StorageLevel.MEMORY_AND_DISK))
+
+  /** Build an index from an ALREADY-TOKENIZED (doc_id, word) table — the
+    * pre-stemmed-fixture path (SURVEY.md §5): the stemmer runs once to
+    * produce the flat table (e.g. written to Parquet), and both this
+    * engine and a SQL oracle that cannot stem score from the same rows.
+    */
+  def buildFromFlat(flat: DataFrame): IndexTables =
+    assemble(graft.Caches.persist(flat))
+
+  /** Every index artifact over the already-persisted flat words `flat`. */
+  private def assemble(flat: DataFrame): IndexTables = {
     val dl = docLengths(flat)
     // N and Σ doc_length in ONE action (was a count + a separate sum —
     // two sequential jobs over the same aggregate)
     val nr = dl.agg(count(lit(1)), coalesce(sum("doc_length"), lit(0L))).head()
     val n = nr.getLong(0)
-    val sumDl = nr.getLong(1)
-    val avgdl = sumDl.toDouble / n
     val tf = termFrequencies(flat)
     val idf = docFreqIdf(flat, n)
     IndexTables(
@@ -136,31 +145,7 @@ object Indexer {
       invertedIndex = invertedIndex(flat),
       postings = postings(tf, idf, dl),
       nDocs = n,
-      avgdl = avgdl)
-  }
-
-  /** Build an index from an ALREADY-TOKENIZED (doc_id, word) table — the
-    * pre-stemmed-fixture path (SURVEY.md §5): the stemmer runs once to
-    * produce the flat table (e.g. written to Parquet), and both this
-    * engine and a SQL oracle that cannot stem score from the same rows.
-    */
-  def buildFromFlat(flat: DataFrame): IndexTables = {
-    val f = graft.Caches.persist(flat)
-    val dl = docLengths(f)
-    val nr = dl.agg(count(lit(1)), coalesce(sum("doc_length"), lit(0L))).head()
-    val n = nr.getLong(0)
-    val sumDl = nr.getLong(1)
-    val tf = termFrequencies(f)
-    val idf = docFreqIdf(f, n)
-    IndexTables(
-      flatWords = f,
-      docLengths = dl,
-      termFrequencies = tf,
-      idfValues = idf,
-      invertedIndex = invertedIndex(f),
-      postings = postings(tf, idf, dl),
-      nDocs = n,
-      avgdl = sumDl.toDouble / n)
+      avgdl = nr.getLong(1).toDouble / n)
   }
 
   /** Persist every artifact as Parquet (reference artifact layout,

@@ -52,6 +52,12 @@ object ColumnShim {
     }
   }
 
+  /** Wait until every listener event posted so far has been delivered
+    * (`listenerBus` is `private[spark]`).
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(30000L)
+
   /** A frame over `l`'s rdd under fresh attribute ids, with no origin
     * statistics or constraints (it plans as a default-sized leaf); the
     * rdd's declared partitioning and ordering are kept.

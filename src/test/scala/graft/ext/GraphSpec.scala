@@ -416,6 +416,19 @@ class GraphSpec extends SparkSpec {
     assert(c2.values.forall(_ >= 2) && c3.values.forall(_ >= 3))
   }
 
+  test("kCore: the plan does not grow with the peel rounds") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
+    def joins(rounds: Int): Int = {
+      val plan = org.apache.spark.sql.graftshim.ColumnShim.logicalPlan(
+        Graph.kCore(edges, k = 2, rounds = rounds))
+      plan.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.size
+    }
+    val (two, eight) = (joins(2), joins(8))
+    graft.Caches.clearPersisted()
+    assert(eight == two)
+  }
+
   test("triangleCensus degree-oriented count equals the naive id-ordered join") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
