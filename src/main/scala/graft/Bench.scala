@@ -56,9 +56,9 @@ object Bench {
     val outcomes = SparkEntry.queries.map { case (name, fn) =>
       val c0 = codegenCompilations()
       // cache hygiene: each rep pays for (and then releases) its own
-      // scoped persists; the session memos keep serving across reps
-      val outcome = timeReps(reps, () => { fn(spark, sfDir).count(); () },
-        () => Caches.clearPersisted())
+      // scoped persists AND its session memo builds, so a median is the
+      // cost of the query with its memos, never a memo read
+      val outcome = timeReps(reps, () => { fn(spark, sfDir).count(); () }, afterRep)
       val dComp = codegenCompilations() - c0
       if (dComp > 0) compDeltas(name) = dComp
       pos += 1
@@ -191,7 +191,7 @@ object Bench {
     queries.foreach { case (_, fn) =>
       try fn(spark, WarmDir).count()
       catch { case _: Throwable => () }
-      Caches.clearPersisted()
+      afterRep()
     }
     spark.catalog.clearCache()
   }
@@ -229,7 +229,7 @@ object Bench {
     */
   def calibrate(spark: SparkSession, sfDir: String): Calibration = {
     def probe(body: () => Unit): Double =
-      timeReps(5, body, () => Caches.clearPersisted()).fold(e => throw e, median)
+      timeReps(5, body, afterRep).fold(e => throw e, median)
     def query(name: String): () => Unit =
       () => { SparkEntry.queries(name)(spark, WarmDir).count(); () }
     val probes = Map(
@@ -242,6 +242,18 @@ object Bench {
         .selectExpr("sum(length(text))").head(); ()
     })
     Calibration(probes, io)
+  }
+
+  /** The clean-up after every timed rep and warm-up run: drops the
+    * query-scoped persists and pins, then every session memo (resolved
+    * `tbl` scans, the built index, the shared checkpointed artifacts).
+    * The next rep pays for its own memo builds, so every timing main
+    * (`Bench`, `TimeQueries`, `ScaleBench`) measures a query with its
+    * memos built, not a memo read.
+    */
+  private[graft] def afterRep(): Unit = {
+    Caches.clearPersisted()
+    SessionMemo.resetAll()
   }
 
   /** The median of sorted `samples` (the upper one of an even count). */

@@ -651,12 +651,8 @@ object ScaleBench {
     Bench.warmup(spark, selected.map(q => q -> queryFor(q)))
 
     def time(q: String, dir: String): Either[Throwable, Double] =
-      Bench.timeReps(reps, () => { queryFor(q)(spark, dir).count(); () }, () => {
-        Caches.clearPersisted()
-        // reps must pay the real cost: memo builds, the built index and
-        // the tbl listings
-        SessionMemo.resetAll()
-      }).map(Bench.median)
+      Bench.timeReps(reps, () => { queryFor(q)(spark, dir).count(); () },
+        Bench.afterRep).map(Bench.median)
 
     // append each row IMMEDIATELY (r15: the first r15 run died on a
     // mid-list query and the four rows already timed were lost —

@@ -151,9 +151,7 @@ object SparkEntry {
         .agg((count(col("y.doc_id")) + 1).as("r"))
     }
     val t = builtIndex(s, dir)
-    val bmTop = Search.scoreTerms(t, SearchTerms)
-      .withColumn("score", round(col("score"), 4))
-      .orderBy(col("score").desc, col("doc_id").asc).limit(50)
+    val bmTop = Search.topK(Search.scoreTerms(t, SearchTerms), 50)
     val e = tbl(s, dir, "embeddings").select("vec_id", "embedding")
     val q = e.filter(col("vec_id") === 0)
       .select(col("embedding").as("q_emb"))
@@ -634,9 +632,8 @@ object SparkEntry {
     */
   private val ltrFeaturesMemo = new SessionMemo[String, DataFrame]((s, dir) => {
     val t = builtIndex(s, dir)
-    val top = Caches.persist(Search.scoreTerms(t, SearchTerms)
-      .withColumn("bm25", round(col("score"), 4)).drop("score")
-      .orderBy(col("bm25").desc, col("doc_id").asc).limit(50))
+    val top = Caches.persist(Search.topK(Search.scoreTerms(t, SearchTerms), 50)
+      .withColumnRenamed("score", "bm25"))
     top.count() // eager: two broadcast subtrees + the main join scan it
     val tfq = t.termFrequencies.filter(col("word").isin(SearchTerms: _*))
       .join(broadcast(t.idfValues.filter(col("word").isin(SearchTerms: _*))
@@ -1031,15 +1028,6 @@ object SparkEntry {
       col("score"))
   }
 
-  /** Spark-side BM25 top-10 with post-rounding deterministic order. */
-  private def bm25Top10(s: SparkSession, dir: String): DataFrame = {
-    val t = builtIndex(s, dir)
-    Search.scoreTerms(t, SearchTerms)
-      .withColumn("score", round(col("score"), 4))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(10)
-  }
-
 
   // ---------------------------------------------------------------------
   // queries
@@ -1219,7 +1207,8 @@ object SparkEntry {
           count(lit(1)).as("n_docs"),
           (sum("doc_length").cast("double") / count(lit(1))).as("avgdl"))),
 
-    "bm25_search" -> ((s, dir) => bm25Top10(s, dir)),
+    "bm25_search" -> ((s, dir) =>
+      Search.topK(Search.scoreTerms(builtIndex(s, dir), SearchTerms), 10)),
 
     "search_boolean_and" -> ((s, dir) =>
       // CONJUNCTIVE boolean retrieval — the strict AND mode beside
@@ -1231,11 +1220,8 @@ object SparkEntry {
       // (Search.scoreTermsConjunctive — TF is (doc, word)-distinct,
       // so count(*) is the distinct-term count), so AND costs exactly
       // what OR costs. Top-10.
-      Search.scoreTermsConjunctive(builtIndex(s, dir),
-          SearchTerms)
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("doc_id").asc)
-        .limit(10)),
+      Search.topK(Search.scoreTermsConjunctive(builtIndex(s, dir),
+        SearchTerms), 10)),
 
     "search_boolean_not" -> ((s, dir) => {
       // EXCLUSION — the third boolean operator beside OR (bm25_search)
@@ -1249,11 +1235,8 @@ object SparkEntry {
       val t = builtIndex(s, dir)
       val excluded = t.termFrequencies
         .filter(col("word") === "slow").select("doc_id")
-      Search.scoreTerms(t, SearchTerms)
-        .join(excluded, Seq("doc_id"), "left_anti")
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("doc_id").asc)
-        .limit(10)
+      Search.topK(Search.scoreTerms(t, SearchTerms)
+        .join(excluded, Seq("doc_id"), "left_anti"), 10)
     }),
 
     "search_pruned_topk" -> ((s, dir) =>
@@ -1341,10 +1324,8 @@ object SparkEntry {
       val okapiIdf = raw
         .select(col("word"),
           when(col("raw") < 0, lit(0.25 * avgIdf)).otherwise(col("raw")).as("idf"))
-      Search.scoreTerms(t.withIdf(okapiIdf), SearchTerms, k1 = 1.5, b = 0.75)
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("doc_id").asc)
-        .limit(10)
+      Search.topK(
+        Search.scoreTerms(t.withIdf(okapiIdf), SearchTerms, k1 = 1.5, b = 0.75), 10)
     }),
 
     "bm25_search_stemmed" -> ((s, dir) => {
@@ -1356,21 +1337,13 @@ object SparkEntry {
       // Fixture build + write are hoisted into [[stemmedFlatMemo]];
       // the index tables themselves into [[stemmedIndex]] (r13 — the
       // per-rep buildFromFlat scalar jobs were the r12 bench swing).
-      val t = stemmedIndex(s, dir)
-      Search.scoreTerms(t, StemmedTerms)
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("doc_id").asc)
-        .limit(10)
+      Search.topK(Search.scoreTerms(stemmedIndex(s, dir), StemmedTerms), 10)
     }),
 
-    "t1_search_snippet" -> ((s, dir) => {
-      val d = docs(s, dir)
-      broadcast(bm25Top10(s, dir))
-        .join(d.select("doc_id", "text"), Seq("doc_id"))
-        .withColumn("snippet", Search.snippet(col("text"), 160))
-        .select("doc_id", "score", "snippet")
-        .orderBy(col("score").desc, col("doc_id").asc)
-    }),
+    "t1_search_snippet" -> ((s, dir) =>
+      Search.withSnippets(
+        Search.topK(Search.scoreTerms(builtIndex(s, dir), SearchTerms), 10),
+        docs(s, dir).select("doc_id", "text"), "text")),
 
     "search_bm25f" -> ((s, dir) =>
       // field-weighted BM25F: the first 8 token positions act as the
@@ -1392,9 +1365,7 @@ object SparkEntry {
       // pair work is pool-bounded: postings are term-filtered and
       // semi-joined to 30 doc ids before the per-doc pair join.
       val t = builtIndex(s, dir)
-      val pool = Caches.persist(Search.scoreTerms(t, SearchTerms)
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("doc_id").asc).limit(30))
+      val pool = Caches.persist(Search.topK(Search.scoreTerms(t, SearchTerms), 30))
       val pos = Caches.persist(
         graft.index.Indexer.positionalPostings(docs(s, dir))
           .filter(col("word").isin(SearchTerms: _*))
@@ -10361,15 +10332,8 @@ object SparkEntry {
           .select(col("doc_id"), col("text").as("opinion_text"))),
         preprocessedDocs = Some(Indexer.preprocessedDocs(docs(s, dir), stem = false)))
       val loaded = Indexer.loadArtifacts(s, ArtifactsPath)
-      val top = Search.scoreTerms(loaded, SearchTerms)
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("doc_id").asc)
-        .limit(10)
-      broadcast(top)
-        .join(s.read.parquet(s"$ArtifactsPath/opinion_text.parquet"), Seq("doc_id"))
-        .withColumn("snippet", Search.snippet(col("opinion_text"), 160))
-        .select("doc_id", "score", "snippet")
-        .orderBy(col("score").desc, col("doc_id").asc)
+      Search.withSnippets(Search.topK(Search.scoreTerms(loaded, SearchTerms), 10),
+        s.read.parquet(s"$ArtifactsPath/opinion_text.parquet"), "opinion_text")
     }),
 
     "stream_ab_srm" -> ((s, dir) => {
@@ -10531,10 +10495,8 @@ object SparkEntry {
       // result set is k-bounded, so the facet joins touch ≤50 rows;
       // the two dimensions union into one (facet, value, n) table.
       val t = builtIndex(s, dir)
-      val top = Caches.persist(Search.scoreTerms(t, SearchTerms)
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("doc_id").asc).limit(50)
-        .select("doc_id"))
+      val top = Caches.persist(
+        Search.topK(Search.scoreTerms(t, SearchTerms), 50).select("doc_id"))
       top.count() // eager: both facet joins scan this cache
       val d = docs(s, dir).select("doc_id", "lang", "source")
         .join(broadcast(top), Seq("doc_id"))
@@ -10563,11 +10525,7 @@ object SparkEntry {
           round(col("idf"), 6), 6))
         .orderBy(col("w").desc, col("word").asc).limit(5)
         .select("word").collect().map(_.getString(0)).toSeq
-      Search.scoreTerms(t, terms)
-        .filter(col("doc_id") =!= seed)
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("doc_id").asc)
-        .limit(10)
+      Search.topK(Search.scoreTerms(t, terms).filter(col("doc_id") =!= seed), 10)
     }),
 
     "search_shard_plan" -> ((s, dir) => {
@@ -10768,9 +10726,7 @@ object SparkEntry {
       // (the S4 scalar-materialize pattern; a production reranker does
       // exactly this on the serving head after retrieval fans in).
       val t = builtIndex(s, dir)
-      val pool = Caches.persist(Search.scoreTerms(t, SearchTerms)
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("doc_id").asc).limit(30))
+      val pool = Caches.persist(Search.topK(Search.scoreTerms(t, SearchTerms), 30))
       val mx = pool.agg(max("score")).head().getDouble(0)
       val ids = pool.select("doc_id")
       val pt = Caches.persist(t.termFrequencies
@@ -10917,10 +10873,7 @@ object SparkEntry {
       // the 5-term list is collected driver-side (S4) exactly like a
       // production query rewriter.
       val t = builtIndex(s, dir)
-      val top10 = Search.scoreTerms(t, SearchTerms)
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("doc_id").asc).limit(10)
-        .select("doc_id")
+      val top10 = Search.topK(Search.scoreTerms(t, SearchTerms), 10).select("doc_id")
       val exp = t.termFrequencies
         .join(broadcast(top10), Seq("doc_id"))
         .filter(!col("word").isin(SearchTerms: _*))

@@ -10,7 +10,9 @@ import org.apache.spark.sql.graftshim.ColumnShim
   * [[Bench]] sweep — `runMain graft.TimeQueries <sfDir> <name> [<name>…]`.
   * Bench's procedure: the calibration probe, one warmup pass, then
   * SPARK_GRAFT_BENCH_REPS reps (default 3) per query with
-  * `Caches.clearPersisted()` after each. Prints the median, every sample
+  * [[Bench.afterRep]] after each, so every rep pays for its own session
+  * memo builds and the median is the query's cost with its memos built,
+  * as in the [[Bench]] sweep. Prints the median, every sample
   * and the per-job / per-stage breakdown of the last rep — wall span,
   * task count, task time, shuffle bytes — from a SparkListener. Jobs ≈
   * driver actions, stages ≈ shuffle boundaries, so the breakdown shows
@@ -71,7 +73,7 @@ object TimeQueries {
   }
 
   /** `reps` timed runs of `fn` on `sfDir` ([[Bench.timeReps]], with
-    * `Caches.clearPersisted()` after each); on success the sorted samples
+    * [[Bench.afterRep]] after each); on success the sorted samples
     * and the breakdown of the last rep, else the exception.
     */
   def time(spark: SparkSession, sfDir: String,
@@ -84,7 +86,7 @@ object TimeQueries {
       // previous rep has been delivered by the drain in `after`
       ColumnShim.drainListenerBus(sc)
       Bench.timeReps(reps, () => { rec.reset(); fn(spark, sfDir).count(); () },
-        () => { Caches.clearPersisted(); ColumnShim.drainListenerBus(sc) })
+        () => { Bench.afterRep(); ColumnShim.drainListenerBus(sc) })
         .map(Timed(_, rec.breakdown))
     } finally sc.removeSparkListener(rec)
   }

@@ -275,22 +275,4 @@ object AsOfJoin {
       (leftCols.map(col) ++ carry.map(c => col("__payload")(c).as(c))
         :+ col("__payload")("asof_time").as("asof_time")): _*)
   }
-
-  /** Hot-key-safe forward as-of: [[forward]]'s semantics through
-    * [[backwardSalted]]'s decomposition, by time negation — "earliest
-    * at-or-after t" is "latest at-or-before −t" on negated clocks, and
-    * the tolerance distance is symmetric under negation. Identical
-    * output to [[forward]].
-    */
-  def forwardSalted(left: DataFrame, right: DataFrame, key: String,
-      leftTime: String, rightTime: String, carry: Seq[String],
-      bucketWidth: Long, tolerance: Option[Long] = None): DataFrame = {
-    require(!left.columns.contains("__ft") && !right.columns.contains("__ft"),
-      "column __ft collides with as-of internals — rename first")
-    val ln = left.withColumn("__ft", -col(leftTime).cast("long"))
-    val rn = right.withColumn("__ft", -col(rightTime).cast("long"))
-    backwardSalted(ln, rn, key, "__ft", "__ft", carry, bucketWidth, tolerance)
-      .withColumn("asof_time", -col("asof_time"))
-      .drop("__ft")
-  }
 }

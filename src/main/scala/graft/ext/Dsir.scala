@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -109,17 +109,4 @@ object Dsir {
       .agg(sum(col("n") * col("lr8")).as("w_q"))
       .select(col("doc_id"),
         (col("w_q").cast("double") / lit(1.0e8)).as("weight"))
-
-  /** DSIR importance weights for every NON-target document with at
-    * least one feature: (doc_id, weight) — [[ratioModel]] over the
-    * full tagged corpus, [[scoreFeatures]] over the raw pool.
-    *
-    * `isTarget` must be a boolean predicate over `docs`' columns.
-    */
-  def importanceWeights(docs: DataFrame, isTarget: Column,
-      buckets: Int): DataFrame = {
-    val tagged = graft.Caches.persist(hashedFeatures(docs, buckets)
-      .join(docs.select(col("doc_id"), isTarget.as("tgt")), Seq("doc_id")))
-    scoreFeatures(tagged.filter(!col("tgt")), ratioModel(tagged, buckets))
-  }
 }

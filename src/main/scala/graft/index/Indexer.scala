@@ -262,14 +262,6 @@ object Indexer {
   }
 }
 
-/** Typed rows for the index artifacts (SURVEY.md §1.1) — `Dataset[T]`
-  * views where compile-time safety helps callers (builder brief).
-  */
-final case class Posting(word: String, doc_ids: Seq[Long])
-final case class DocStat(doc_id: Long, doc_length: Long)
-final case class TermFreq(doc_id: Long, word: String, term_freq: Long)
-final case class IdfRow(word: String, doc_freq: Long, idf: Double)
-
 /** The in-memory handle on a built index (SURVEY.md §1.1 artifact set).
   * `postings` is [[Indexer.postings]] over this index's own
   * `termFrequencies`, `idfValues` and `docLengths`; a `copy` that swaps
@@ -284,28 +276,9 @@ final case class IndexTables(
     postings: DataFrame,
     nDocs: Long,
     avgdl: Double) {
-  import org.apache.spark.sql.Dataset
-
   /** This index scored with `idf` — (word, idf) rows — in place of its
     * own IDF table, with `postings` derived from the new table.
     */
   def withIdf(idf: DataFrame): IndexTables =
     copy(idfValues = idf, postings = Indexer.postings(termFrequencies, idf, docLengths))
-
-  def typedDocLengths: Dataset[DocStat] = {
-    val s = docLengths.sparkSession; import s.implicits._
-    docLengths.as[DocStat]
-  }
-  def typedTermFrequencies: Dataset[TermFreq] = {
-    val s = termFrequencies.sparkSession; import s.implicits._
-    termFrequencies.as[TermFreq]
-  }
-  def typedIdfValues: Dataset[IdfRow] = {
-    val s = idfValues.sparkSession; import s.implicits._
-    idfValues.as[IdfRow]
-  }
-  def typedInvertedIndex: Dataset[Posting] = {
-    val s = invertedIndex.sparkSession; import s.implicits._
-    invertedIndex.as[Posting]
-  }
 }

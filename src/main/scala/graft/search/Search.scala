@@ -1,6 +1,6 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.index.{IndexTables, Indexer}
@@ -12,6 +12,12 @@ import graft.text.Tokenizer
   *   query → tokenize (driver-side) → TF filtered to query terms
   *         → ⋈ IDF (broadcast) → ⋈ doc_lengths → BM25 column arithmetic
   *         → sum per doc → top-k → (optionally) ⋈ text for snippets
+  *
+  * The served list is written once: [[topK]] turns any scored
+  * (doc_id, score) frame into the result list (4dp score, rounded score
+  * descending, doc_id ascending, k rows) and [[withSnippets]] joins it
+  * to the text. Every BM25 ranked list of the gate queries, the flagship
+  * `SparkEntry.entry` and [[topKWithSnippet]] go through the two.
   *
   * Fixes over the reference, per SURVEY.md §3.1:
   *  - the N+1 text lookup (`pyapp.py:110-114` runs one filter+collect job
@@ -81,27 +87,42 @@ object Search {
       .orderBy(col("score").desc, col("doc_id").asc)
   }
 
-  /** Top-k (doc_id, score) for a free-text query over a (doc_id, text)
-    * corpus. Builds the index in-plan (batch engine, no serving state).
+  /** The served result list: `scored` (doc_id, score) with the score
+    * rounded to 4dp, ordered by that rounded score descending then
+    * doc_id ascending, first `k` rows. Every BM25 ranked list the
+    * engine serves goes through here, so a 4dp tie is broken by doc_id,
+    * never by the unrounded score. Catalyst plans the order-and-limit as
+    * `TakeOrderedAndProject`, a distributed top-k with no full sort.
     */
-  def topK(docs: DataFrame, query: String, k: Int = 10, stem: Boolean = true): DataFrame = {
-    val t = Indexer.build(docs, stem)
-    val terms = Tokenizer.tokenize(query, stem).distinct
-    scoreTerms(t, terms).limit(k)
-  }
+  def topK(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("score", round(col("score"), 4))
+      .orderBy(col("score").desc, col("doc_id").asc)
+      .limit(k)
 
-  /** Top-k with text snippet — the fixed serving path (one plan, broadcast
-    * join of the k result rows back to the corpus). Output:
-    * (doc_id, score, snippet).
+  /** Snippet length of every served result (`pyapp.py:116-117`). */
+  val SnippetLen = 160
+
+  /** The snippet join: the k-bounded `top` (doc_id, score) broadcast
+    * against `corpus` on doc_id, with `textCol` cut by [[snippet]].
+    * Output: (doc_id, score, snippet), score descending, ties by doc_id.
     */
-  def topKWithSnippet(docs: DataFrame, query: String, k: Int = 10,
-      stem: Boolean = true, maxLen: Int = 160): DataFrame = {
-    val top = topK(docs, query, k, stem)
+  def withSnippets(top: DataFrame, corpus: DataFrame, textCol: String): DataFrame =
     broadcast(top)
-      .join(docs.select("doc_id", "text"), Seq("doc_id"))
-      .withColumn("snippet", snippet(col("text"), maxLen))
+      .join(corpus, Seq("doc_id"))
+      .withColumn("snippet", snippet(col(textCol), SnippetLen))
       .select("doc_id", "score", "snippet")
       .orderBy(col("score").desc, col("doc_id").asc)
+
+  /** Top-k with text snippet for a free-text query over an ad-hoc
+    * (doc_id, text) corpus: the index is built in-plan (batch engine,
+    * no serving state), then [[topK]] and [[withSnippets]] as for every
+    * served query. Output: (doc_id, score, snippet), score at 4dp.
+    */
+  def topKWithSnippet(docs: DataFrame, query: String, k: Int = 10,
+      stem: Boolean = true): DataFrame = {
+    val t = Indexer.build(docs, stem)
+    val terms = Tokenizer.tokenize(query, stem).distinct
+    withSnippets(topK(scoreTerms(t, terms), k), docs.select("doc_id", "text"), "text")
   }
 
   /** Per-term score UPPER BOUNDS for MaxScore pruning: for every word,
@@ -171,10 +192,6 @@ object Search {
   def prunedTopK(t: IndexTables, bounds: DataFrame, terms: Seq[String],
       k: Int = 10, k1: Double = BM25.DefaultK1,
       b: Double = BM25.DefaultB): DataFrame = {
-    def finish(scored: DataFrame): DataFrame = scored
-      .withColumn("score", round(col("score"), 4))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
     val ubs = bounds.filter(col("word").isin(terms: _*))
       .select("word", "ub").collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
@@ -196,51 +213,19 @@ object Search {
         t.termFrequencies.filter(col("word") === tstar).select("doc_id"))
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(k).collect()
-    if (seedTop.length < k) return finish(scoreTerms(t, present, k1, b))
+    if (seedTop.length < k) return topK(scoreTerms(t, present, k1, b), k)
     val theta = seedTop.map(_.getDouble(1)).min
     val essential = essentialTerms(ubs, theta)
     val candidates = t.termFrequencies
       .filter(col("word").isin(essential: _*))
       .select("doc_id").distinct()
-    finish(fullScore(candidates))
+    topK(fullScore(candidates), k)
   }
 
   /** F6: truncate-with-ellipsis, native expressions (`pyapp.py:116-117`). */
   def snippet(text: Column, maxLen: Int): Column =
     when(length(text) > maxLen, concat(substring(text, 1, maxLen), lit("...")))
       .otherwise(text)
-
-  /** The SQL entry point done right (SURVEY.md §3.3a): the reference
-    * string-formats avgdl and the term list into SQL over temp views it
-    * never registers (`searchenginespark.py:214-235`). We register the
-    * views, escape the literals, and keep k1/b as real parameters. The
-    * view names are unique per call and the views are dropped once
-    * `spark.sql` has analysed the query (the returned plan holds their
-    * tables), so concurrent calls on one session never read each
-    * other's index.
-    */
-  def sqlSearch(spark: SparkSession, t: IndexTables, terms: Seq[String],
-      k: Int = 10, k1: Double = BM25.DefaultK1, b: Double = BM25.DefaultB): DataFrame = {
-    val id = sqlViewIds.getAndIncrement()
-    val views = Seq(t.termFrequencies -> s"term_frequencies_$id",
-      t.docLengths -> s"document_lengths_$id", t.idfValues -> s"idf_values_$id")
-    views.foreach { case (df, name) => df.createOrReplaceTempView(name) }
-    val termList = terms.map(s => "'" + s.replace("'", "''") + "'").mkString(", ")
-    try spark.sql(
-      s"""SELECT t.doc_id,
-         |       SUM(i.idf * (t.term_freq * (${k1} + 1)) /
-         |           (t.term_freq + ${k1} * (1 - ${b} + ${b} * d.doc_length / ${t.avgdl}))) AS score
-         |FROM term_frequencies_$id t
-         |JOIN document_lengths_$id d ON t.doc_id = d.doc_id
-         |JOIN idf_values_$id i ON t.word = i.word
-         |WHERE t.word IN ($termList)
-         |GROUP BY t.doc_id
-         |ORDER BY score DESC, doc_id ASC
-         |LIMIT $k""".stripMargin)
-    finally views.foreach { case (_, name) => spark.catalog.dropTempView(name) }
-  }
-
-  private val sqlViewIds = new java.util.concurrent.atomic.AtomicLong
 
   /** Exact-phrase match over positional postings
     * ([[Indexer.positionalPostings]]): phrase term i maps each of its

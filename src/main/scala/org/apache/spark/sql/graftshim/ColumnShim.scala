@@ -40,7 +40,7 @@ object ColumnShim {
     * plan assertions: under AQE the finalized exchanges are wrapped in
     * `ShuffleQueryStageExec` LEAF nodes — `plan.collect` cannot see
     * through them, so count exchanges in the plan RENDERING (see
-    * `BucketingSpec.shuffles`), never via `collect { case e:
+    * `BucketedJoinSpec.shuffles`), never via `collect { case e:
     * ShuffleExchangeExec => }`.
     */
   def executedPlan(df: DataFrame): org.apache.spark.sql.execution.SparkPlan = {

@@ -42,4 +42,20 @@ class ContractSpec extends AnyFunSuite {
     assert(qd.isEmpty, s"duplicate query keys: $qd")
     assert(od.isEmpty, s"duplicate oracle keys: $od")
   }
+
+  test("the served-list rounding is written only in Search.topK") {
+    // one rule turns a (doc_id, score) frame into a served list; a copy
+    // of its 4dp rounding elsewhere is a second rule that can drift
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"$root not found (cwd?)")
+    val rule = java.util.regex.Pattern.quote("""round(col("score"), 4)""").r
+    val hits = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map { p =>
+        root.relativize(p).toString.replace('\\', '/') ->
+          rule.findAllIn(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).size
+      }.filter(_._2 > 0).toMap
+    assert(hits == Map("graft/search/Search.scala" -> 1), hits.toString)
+  }
 }

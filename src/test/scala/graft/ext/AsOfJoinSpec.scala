@@ -189,22 +189,6 @@ class AsOfJoinSpec extends SparkSpec {
     }
   }
 
-  test("salted forward as-of equals forward (time-negation decomposition)") {
-    import spark.implicits._
-    val lrows = (0 until 150).map(i => ((i % 5).toLong, (i * 89L) % 2000L, i.toLong))
-    val rrows = (0 until 40).map(i => ((i % 5).toLong, (i * 113L) % 1800L, (1000 + i).toLong))
-      .groupBy(r => (r._1, r._2)).map(_._2.maxBy(_._3)).toSeq
-    val l = lrows.toDF("k", "lt", "id")
-    val r = rrows.toDF("k", "rt", "v")
-    for (bw <- Seq(7L, 250L); tol <- Seq(None, Some(60L))) {
-      val plain = AsOfJoin.forward(l, r, "k", "lt", "rt", Seq("v"), tol)
-        .as[(Long, Long, Long, Long, Long)].collect().toSet
-      val salted = AsOfJoin.forwardSalted(l, r, "k", "lt", "rt", Seq("v"), bw, tol)
-        .as[(Long, Long, Long, Long, Long)].collect().toSet
-      assert(salted == plain, s"bucketWidth=$bw tol=$tol")
-    }
-  }
-
   test("salted backward rejects reserved internal column names") {
     import spark.implicits._
     val l = Seq((1L, 1L, 2L)).toDF("k", "lt", "__b")

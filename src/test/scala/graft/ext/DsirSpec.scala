@@ -23,23 +23,6 @@ class DsirSpec extends SparkSpec {
     assert(feat.agg(sum("n")).head().getLong(0) == 3L)
   }
 
-  test("importanceWeights: target-like candidates outrank disjoint ones") {
-    val docs = Seq(
-      (1L, "alpha beta gamma alpha beta", "tgt"),
-      (2L, "alpha beta gamma beta alpha", "tgt"),
-      (3L, "alpha beta gamma", "raw"), // shares the target's n-grams
-      (4L, "zulu yankee xray whisky", "raw") // disjoint from the target
-    ).toDF("doc_id", "text", "source")
-    val w = Dsir.importanceWeights(docs, col("source") === "tgt", 1024)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(w.keySet == Set(3L, 4L), "only non-target docs are weighted")
-    assert(w(3L) > w(4L),
-      s"target-like doc must outrank the disjoint one: $w")
-    assert(w(3L) > 0.0 && w(4L) < 0.0,
-      s"signs: shared n-grams → positive LLR, disjoint → negative: $w")
-    graft.Caches.clearPersisted()
-  }
-
   test("scoreFeatures: batching-independent against a frozen model") {
     // the stream ≡ batch property stream_dsir_score gates: scoring a
     // corpus whole equals scoring it in arbitrary batches, because a
@@ -62,20 +45,5 @@ class DsirSpec extends SparkSpec {
       scores(all.filter(col("doc_id") > 2))
     assert(whole == batched)
     graft.Caches.clearPersisted()
-  }
-
-  test("importanceWeights: deterministic across recomputation") {
-    val docs = Seq(
-      (1L, "alpha beta gamma delta", "tgt"),
-      (2L, "alpha gamma beta", "raw"),
-      (3L, "omega sigma tau", "raw")
-    ).toDF("doc_id", "text", "source")
-    def run() = {
-      val r = Dsir.importanceWeights(docs, col("source") === "tgt", 64)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      graft.Caches.clearPersisted()
-      r
-    }
-    assert(run() == run())
   }
 }

@@ -55,15 +55,13 @@ class IndexerSpec extends SparkSpec {
     assert(math.abs(idf("sort")._3 - math.log10(3.0 / 2)) < 1e-12)
     assert(idf("scan")._2 == 1)
     assert(math.abs(idf("scan")._3 - math.log10(3.0)) < 1e-12)
-  }
-
-  test("typed Dataset views expose the artifact rows") {
-    val t = Indexer.build(corpus, stem = false)
-    val postings = t.typedInvertedIndex.collect().map(p => p.word -> p.doc_ids).toMap
+    assert(idf.values.forall(r => r._2 >= 1 && r._2 <= 3))
+    // the built index's own artifact rows
+    val postings = t.invertedIndex.select("word", "doc_ids")
+      .as[(String, Seq[Long])].collect().toMap
     assert(postings("sort") == Seq(1L, 2L))
-    assert(t.typedDocLengths.collect().map(_.doc_length).sum == 11)
-    assert(t.typedTermFrequencies.collect().forall(_.term_freq >= 1))
-    assert(t.typedIdfValues.collect().forall(r => r.doc_freq >= 1 && r.doc_freq <= 3))
+    assert(t.docLengths.select("doc_length").as[Long].collect().sum == 11)
+    assert(t.termFrequencies.select("term_freq").as[Long].collect().forall(_ >= 1))
   }
 
   test("inverted index posting lists sorted") {

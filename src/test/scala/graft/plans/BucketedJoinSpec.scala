@@ -10,11 +10,11 @@ import graft.{SparkEntry, SparkSpec}
   * "pay the shuffle once at write time" pattern). Only the final
   * per-priority aggregation may exchange.
   *
-  * AQE caveat (this repo's `BucketingSpec` documents it): the final
-  * adaptive plan wraps exchanges in `ShuffleQueryStageExec`, a LEAF node
-  * — `plan.collect { case e: ShuffleExchangeExec => }` sees NOTHING and
-  * would pass vacuously. Count occurrences in the final plan RENDERING
-  * instead, after materializing.
+  * AQE caveat: the final adaptive plan wraps exchanges in
+  * `ShuffleQueryStageExec`, a LEAF node — `plan.collect { case e:
+  * ShuffleExchangeExec => }` sees NOTHING and would pass vacuously.
+  * Count occurrences in the final plan RENDERING instead, after
+  * materializing.
   */
 class BucketedJoinSpec extends SparkSpec {
 

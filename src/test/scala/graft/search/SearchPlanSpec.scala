@@ -1,13 +1,12 @@
 package graft.search
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.index.Indexer
 
 /** Executed-plan regression guards for the flagship search path (r2
   * VERDICT item 7): the plan properties `docs/SCALE.md` documents must
   * FAIL the build if someone reintroduces a UDF, a full sort, or loses
-  * the broadcast — same style as `BucketingSpec`'s zero-shuffle assert.
+  * the broadcast — same style as `BucketedJoinSpec`'s zero-shuffle assert.
   */
 class SearchPlanSpec extends SparkSpec {
 
@@ -22,10 +21,7 @@ class SearchPlanSpec extends SparkSpec {
       .map(i => (i, s"merge sort table scan row filter group agg $i"))
       .toDF("doc_id", "text")
     val t = Indexer.build(corpus, stem = false)
-    val top10 = Search.scoreTerms(t, Seq("merge", "scan", "filter"))
-      .withColumn("score", round(col("score"), 4))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(10)
+    val top10 = Search.topK(Search.scoreTerms(t, Seq("merge", "scan", "filter")), 10)
     val plan = executedPlan(top10)
 
     // top-k must be a distributed TakeOrderedAndProject, never a global sort
@@ -44,9 +40,12 @@ class SearchPlanSpec extends SparkSpec {
     val corpus = (1L to 300L)
       .map(i => (i, s"merge sort table scan row filter group agg $i"))
       .toDF("doc_id", "text")
-    val withSnippets = Search.topKWithSnippet(corpus, "merge scan", k = 10, stem = false)
+    val t = Indexer.build(corpus, stem = false)
+    val withSnippets = Search.withSnippets(
+      Search.topK(Search.scoreTerms(t, Seq("merge", "scan")), 10), corpus, "text")
     val plan = executedPlan(withSnippets)
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("ScalaUDF"), plan)
+    t.flatWords.unpersist(false)
   }
 }

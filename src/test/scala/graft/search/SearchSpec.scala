@@ -36,24 +36,20 @@ class SearchSpec extends SparkSpec {
 
   test("topK ranks docs with more matching terms higher") {
     import spark.implicits._
-    val top = Search.topK(corpus, "merge sort", k = 4, stem = false)
+    val t = Indexer.build(corpus, stem = false)
+    val top = Search.topK(Search.scoreTerms(t, Seq("merge", "sort")), 4)
       .select("doc_id").as[Long].collect()
     assert(top.head == 1L) // doc 1 has both terms, high tf
     assert(top.toSet.contains(2L)) // doc 2 matches "merge" only
     assert(!top.toSet.contains(3L) && !top.toSet.contains(4L))
+    t.flatWords.unpersist(false)
   }
 
-  test("scores agree between DataFrame path and SQL entry point") {
-    val t = Indexer.build(corpus, stem = false)
-    val terms = Seq("merge", "join")
+  test("topK breaks a 4dp tie by doc_id, not by the unrounded score") {
     import spark.implicits._
-    val a = Search.scoreTerms(t, terms)
-      .select(col("doc_id"), round(col("score"), 9).as("score"))
-      .as[(Long, Double)].collect().toMap
-    val b = Search.sqlSearch(spark, t, terms, k = 10)
-      .select(col("doc_id"), round(col("score"), 9).as("score"))
-      .as[(Long, Double)].collect().toMap
-    assert(a == b)
+    val scored = Seq((1L, 0.12341), (2L, 0.12344)).toDF("doc_id", "score")
+    assert(Search.topK(scored, 1).as[(Long, Double)].collect().toSeq ==
+      Seq((1L, 0.1234)))
   }
 
   test("snippet truncation") {
@@ -70,6 +66,14 @@ class SearchSpec extends SparkSpec {
       .as[(Long, Double, String)].collect()
     assert(got.map(_._1).toSeq == Seq(3L))
     assert(got.head._3.startsWith("table scan"))
+  }
+
+  test("topKWithSnippet serves scores rounded to 4dp") {
+    import spark.implicits._
+    val scores = Search.topKWithSnippet(corpus, "merge sort join", k = 4, stem = false)
+      .select("score").as[Double].collect()
+    assert(scores.length == 2)
+    scores.foreach(s => assert(BigDecimal(s).scale <= 4, s"$s has more than 4 decimals"))
   }
 
   test("phraseMatch requires adjacency, keeps stopwords, handles repeats") {
@@ -200,38 +204,5 @@ class SearchSpec extends SparkSpec {
     assert(got.size == 5)
     assert(got == want)
     t.flatWords.unpersist(false)
-  }
-
-  test("concurrent sqlSearch calls on different indexes each read their own tables") {
-    import spark.implicits._
-    val other = Seq(
-      (101L, "merge join merge"),
-      (102L, "join table join join"),
-      (103L, "scan merge")).toDF("doc_id", "text")
-    val indexes = Seq(Indexer.build(corpus, stem = false), Indexer.build(other, stem = false))
-    val terms = Seq("merge", "join")
-    def run(t: graft.index.IndexTables): Map[Long, Double] =
-      Search.sqlSearch(spark, t, terms, k = 10)
-        .select(col("doc_id"), round(col("score"), 9).as("score"))
-        .as[(Long, Double)].collect().toMap
-    val want = indexes.map(run)
-    assert(want(0).keySet == Set(1L, 2L) && want(1).keySet == Set(101L, 102L, 103L))
-    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val threads = indexes.zip(want).map { case (t, w) =>
-      new Thread(() => (1 to 15).foreach { i =>
-        try {
-          val got = run(t)
-          if (got != w) errors.add(s"call $i: $got != $w")
-        } catch { case e: Throwable => errors.add(s"call $i: $e") }
-      })
-    }
-    threads.foreach(_.start())
-    threads.foreach(_.join())
-    assert(errors.isEmpty, errors.toString)
-    // the per-call views are gone once each query is analysed
-    val left = spark.catalog.listTables().collect().map(_.name)
-      .filter(_.matches("(term_frequencies|document_lengths|idf_values)_\\d+"))
-    assert(left.isEmpty, left.mkString(", "))
-    indexes.foreach(_.flatWords.unpersist(false))
   }
 }
